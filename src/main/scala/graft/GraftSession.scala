@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
 /** Canonical session factory: one place for the engine's Spark tuning.
@@ -38,6 +39,23 @@ object GraftSession {
       // events.ts is parquet TIMESTAMP(NANOS); read as long + convert
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+
+  /** Local cores for the CLI mains: SPARK_GRAFT_CPUS, else every
+    * processor of this machine.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Runs `body` with `label` as the description of this thread's jobs,
+    * restoring the caller's description on every exit path (the
+    * property is thread-local, so an unrestored label mislabels every
+    * later job of the caller).
+    */
+  def withLabel[T](sc: SparkContext, label: String)(body: => T): T = {
+    val saved = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(saved)
+  }
 
   /** Local session sized for this machine (tests, Verify, Bench). */
   def local(cores: Int): SparkSession = {

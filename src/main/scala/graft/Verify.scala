@@ -1,41 +1,34 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. The optional
+  * query list (dev only) selects as `graft.Bench subset` does.
+  */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    // optional 3rd arg (dev only): comma-separated query names to run
-    val (sfDir, outDir, only) = args match {
-      case Array(a, b)    => (a, b, None)
-      case Array(a, b, c) => (a, b, Some(c.split(",").toSet))
+  val usage = "usage: graft.Verify <sfDir> <outDir> [q,...]"
+
+  def parse(args: Seq[String]): Either[String, (String, String, Seq[(String, Bench.Query)])] =
+    args match {
+      case Seq(sfDir, outDir) => Right((sfDir, outDir, SparkEntry.queries.toSeq))
+      case Seq(sfDir, outDir, list) => Bench.select(list).map((sfDir, outDir, _))
+      case _ => Left(s"unexpected arguments: ${args.mkString(" ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus.toInt)
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, outDir, queries) = Bench.orUsage(parse(args.toSeq), usage)
+    val spark = GraftSession.local(GraftSession.cpus)
+    val runner = new Bench.Runner(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    // subset matching accepts full names or prefixes ("q73" matches
-    // "q73_salted_join") — an exact-only match made "q73,q75" silently
-    // run NOTHING, which read as success
-    SparkEntry.queries
-      .filter { case (name, _) =>
-        only.forall(_.exists(p => name == p || name.startsWith(p)))
-      }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    queries.foreach { case (name, fn) =>
+      try GraftSession.withLabel(spark.sparkContext, name) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop run state between queries: localCheckpoint blocks (not in
-      // the SQL cache) otherwise accumulate across the 270+ queries in
-      // this one JVM and slow the tail of the sweep (round-14 opt).
-      // ASSUMES queries are independent: this sweep kills EVERY
-      // persistent RDD in the JVM, so cross-query shared state backed
-      // by localCheckpoint would be destroyed unrecoverably (lineage is
-      // truncated). Bench/BenchSubset share the same implicit contract.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // checkpoint blocks would otherwise pile up across 270+ queries in
+      // one JVM. ASSUMES queries are independent: a query's checkpoints
+      // are gone (lineage truncated) before the next one runs.
+      runner.drop()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -696,7 +696,14 @@ object Dedup {
     * default 25 covers any graph that fits on a cluster.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-      jumpAfter: Int = 2): DataFrame = {
+      jumpAfter: Int = 2): DataFrame =
+    // the rounds relabel inside one scope: the caller's label is restored
+    // on return and on a throw
+    graft.GraftSession.withLabel(pairs.sparkSession.sparkContext,
+      "connectedComponents")(componentRounds(pairs, maxIter, jumpAfter))
+
+  private def componentRounds(pairs: DataFrame, maxIter: Int,
+      jumpAfter: Int): DataFrame = {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct().persist()
@@ -711,8 +718,8 @@ object Dedup {
         if (iter >= maxIter)
           throw new IllegalStateException(
             s"connectedComponents did not converge in $maxIter rounds (graph diameter too large)")
-        // per-round job label (guide §1.5) — attributes the loop's jobs
-        // in the UI/event log; thread-local, callers relabel after
+        // per-round job label — attributes the loop's jobs in the
+        // UI/event log
         pairs.sparkSession.sparkContext
           .setJobDescription(s"connectedComponents: round $iter")
         val neighborMin = edges

@@ -363,11 +363,7 @@ object Urls {
       agent: String = "*", broadcastMaxRules: Long = 2000000L,
       rulesCountHint: Option[Long] = None): DataFrame = {
     val (host, _) = hostPort(col(urlCol))
-    // widen: the rule match below is a per-(page,rule) regexp on the
-    // broadcast join's STREAMED side, so the pages scan partitioning
-    // is the match parallelism (see canonicalHashes; no-op at scale)
-    val parsed = graft.sources.Tables.widen(urls)
-      .select(col(idCol).as("_id"), host.as("host"),
+    val parsed = urls.select(col(idCol).as("_id"), host.as("host"),
         pathOf(col(urlCol)).as("path"))
     val rules = robotsRules(robots, domainCol, txtCol, agent)
       .withColumnRenamed(domainCol, "host")
@@ -670,11 +666,10 @@ object Urls {
   // index holds only the 60-bit md5 hashes of canonical URLs — raw
   // URL text never lands in the index.
 
-  // widen: canonicalize is a per-row regexp battery — a one-file
-  // bench-scale batch would run it on the scan's 1-4 partitions;
-  // stats-guarded no-op at real scale (guide §2.5)
+  // no widen before the canonicalize battery: the callers run once per
+  // crawl batch, and a round-robin exchange there is a shuffle per batch
   private def canonicalHashes(urls: DataFrame, urlCol: String) =
-    graft.sources.Tables.widen(urls).select(canonicalize(col(urlCol))
+    urls.select(canonicalize(col(urlCol))
         .getField("canonical_url").as("_c"))
       .filter(col("_c").isNotNull)
       .select(graft.functions.TextFunctions.md5Hash60(col("_c")).as("h"))
@@ -819,9 +814,8 @@ object Urls {
       urls: DataFrame, idCol: String, urlCol: String): DataFrame = {
     graft.sinks.Pruning.requireIndexParams(spark, path, "frontier",
       Map.empty)
-    // widen before the canonicalize battery (see canonicalHashes)
-    val canon = graft.sources.Tables.widen(urls)
-      .select(col(idCol).as("_id"),
+    // no widen before the canonicalize battery (see canonicalHashes)
+    val canon = urls.select(col(idCol).as("_id"),
         canonicalize(col(urlCol)).getField("canonical_url")
           .as("canonical_url"))
       .withColumn("_h",

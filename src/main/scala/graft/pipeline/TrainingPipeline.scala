@@ -137,12 +137,16 @@ object TrainingPipeline {
     * drop docs that never verified against their representative, and
     * that data-loss mode must be visible to the pipeline caller.
     */
-  def prepareMetered(docs: DataFrame, cfg: Config = Config()): Prepared = {
-    // label each stage's jobs (guide §1.5): the pipeline materializes
-    // stages eagerly, so without labels its dozens of jobs show up as
-    // anonymous withThreadLocalCaptured entries in the UI/event log.
-    // Thread-local; restored by the caller's own description (if any)
-    // being re-set, cleared at return.
+  def prepareMetered(docs: DataFrame, cfg: Config = Config()): Prepared =
+    // label each stage's jobs: the pipeline materializes stages eagerly,
+    // so without labels its dozens of jobs show up as anonymous
+    // withThreadLocalCaptured entries in the UI/event log. The stages
+    // relabel inside one scope; the caller's label is restored on return
+    // and on a throw.
+    graft.GraftSession.withLabel(docs.sparkSession.sparkContext,
+      "TrainingPipeline")(prepareLabeled(docs, cfg))
+
+  private def prepareLabeled(docs: DataFrame, cfg: Config): Prepared = {
     val sc = docs.sparkSession.sparkContext
     def label(stage: String): Unit =
       sc.setJobDescription(s"TrainingPipeline: $stage")
@@ -324,7 +328,6 @@ object TrainingPipeline {
         .collect()(0).getLong(0)
       meters += StageMeter(8, "split_leaks", lk, 0L)
     }
-    sc.setJobDescription(null)
     Prepared(assigned, cp.cappedBucketCount, meters.toSeq)
   }
 }

@@ -942,7 +942,7 @@ object Relational {
   /** TPC-H Q2-shape correlated scalar subquery: parts whose cheapest
     * supplier offer equals the global minimum for that part — the
     * classic "argmin per group via correlated MIN" Catalyst must
-    * decorrelate into an aggregate + join (verify with `Explain`: no
+    * decorrelate into an aggregate + join (verify with `Bench plan`: no
     * per-row subquery execution survives planning).
     * Scale: one shuffle on ps_partkey for the per-part min, reused by
     * the join probe.

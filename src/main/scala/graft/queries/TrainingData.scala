@@ -8300,11 +8300,8 @@ object TrainingData {
       .toDF("page_id", "url", "_body")
       .select(col("page_id"), col("url"),
         page(col("page_id"), col("_body")).as("html"))
-    // widen: the robots match + canonicalize below are per-row regexp
-    // batteries, and this 4-branch union of one-file scans would run
-    // them on 4 partitions (guide §2.5); no-op at real scale
-    val fetched = Tables.widen(base.unionByName(twinsA).unionByName(twinsB)
-      .unionByName(extras))
+    val fetched = base.unionByName(twinsA).unionByName(twinsB)
+      .unionByName(extras)
 
     // 1. robots gate: every example.com host disallows /private for
     // every agent; the spamfarm/keeper hosts publish no robots

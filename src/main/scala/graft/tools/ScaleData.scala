@@ -36,8 +36,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, copiesStr) = args
     val copies = copiesStr.toInt
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

@@ -497,6 +497,20 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("a frontier probe adds no round-robin exchange to the batch") {
+    // probeFrontier runs once per crawl micro-batch: a widen before its
+    // canonicalize battery would be one more shuffle on every batch
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-fprobe").toString
+    def urls(ids: Range) =
+      ids.map(i => (i.toLong, s"https://h${i % 5}.example.com/p/$i")).toDF("id", "url")
+    graft.operators.Urls.writeFrontierIndex(urls(0 until 20), "url", tmp)
+    val probe = graft.operators.Urls.probeFrontier(spark, tmp, urls(10 until 30), "id", "url")
+    probe.collect() // finalize THIS df's AQE plan
+    val plan = probe.queryExecution.executedPlan.toString
+    assert(plan.contains("Exchange") && !plan.contains("RoundRobinPartitioning"), plan)
+  }
+
   test("hot aggregation queries stay inside whole-stage codegen") {
     // "*(n)" marks operators fused into a generated stage; a plan with
     // none at all has fallen out of codegen entirely. Codegen insertion
