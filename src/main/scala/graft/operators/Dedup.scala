@@ -131,18 +131,19 @@ object Dedup {
         transform(slice(sig, b * lit(rowsPerBand) + lit(1), lit(rowsPerBand)),
           h => h.cast(org.apache.spark.sql.types.StringType)), ",")))
 
-  /** Internal: one cached (id, shingles, band rows) frame — shingling
-    * and signatures are computed once and reused by both join sides and
-    * by the verification step. Callers OWN the persist: compute results
-    * eagerly, then `unpersist()` (see the public operators below).
+  /** The signature projection: (`_id`, sorted distinct shingle set
+    * `_sh`, MinHash `_sig`, LSH band keys `_bands`) per doc with at
+    * least one shingle. One projection and filter per row: no shuffle,
+    * no persist, no job — callers choose the partitioning (the batch
+    * operators widen first, the per-increment paths do not) and own
+    * any persist.
     */
-  private def shingleBands(
+  private[graft] def sign(
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
-    val sigs = graft.sources.Tables.widen(df)
-      .select(
+    df.select(
         col(idCol).as("_id"),
         // sorted ONCE per doc so pairwise verification can use the
         // alloc-free merge-walk intersection (SortedOverlapExpression)
@@ -155,7 +156,7 @@ object Dedup {
       // materialized as its OWN column before banding: inlining it into
       // lshBandKeys would paste the (non-cheap) expression into every
       // band lambda — `bands`× signature computations per row. `_sig`
-      // stays in the cached frame so CollapseProject can't re-inline it.
+      // stays in persisted frames so CollapseProject can't re-inline it.
       .withColumn("_sig", graft.expressions.MinHashSignatureExpression
         .minhashSignatureNative(col("_sh"), numHashes))
       // native band keys (bit-identical to lshBandKeys, parity in spec):
@@ -163,7 +164,19 @@ object Dedup {
       // the stage into the interpreted row path
       .withColumn("_bands", graft.expressions.BandKeysExpression
         .bandKeysNative(col("_sig"), bands, rowsPerBand))
-      .persist()
+  }
+
+  /** Internal: one cached, widened [[sign]] frame for the batch
+    * self-join operators — shingling and signatures are computed once
+    * and reused by both join sides and by the verification step.
+    * Callers OWN the persist: compute results eagerly, then
+    * `unpersist()` (see the public operators below).
+    */
+  private def shingleBands(
+      df: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int, numHashes: Int, bands: Int): DataFrame = {
+    val sigs = sign(graft.sources.Tables.widen(df), idCol, textCol,
+      shingleSize, numHashes, bands).persist()
     // materialize the cache NOW: the downstream plan reads this frame
     // from up to five branches (both self-join sides, the bucket stats,
     // and both verification sides) — if the first action races them
@@ -198,7 +211,8 @@ object Dedup {
     * that want verified pairs only can `filter(!col("is_star"))`.
     */
   /** Best-effort diagnostic: number of degenerate (capped) buckets seen
-    * by the most recent capped-band operator call in this JVM. One
+    * by the most recent capped-band operator call in this JVM (for the
+    * incremental probe: the over-cap buckets the increment touches). One
     * global last-write-wins cell — concurrent operator calls in the
     * same session clobber each other, so for anything load-bearing use
     * the `*Metered` operator variants, which return the count PER CALL
@@ -373,21 +387,54 @@ object Dedup {
   def writeMinHashIndex(
       df: DataFrame, path: String, idCol: String, textCol: String,
       shingleSize: Int = 7, numHashes: Int = 96, bands: Int = 24): Unit = {
-    val sigs = shingleBands(df, idCol, textCol, shingleSize, numHashes, bands)
-    try {
-      sigs.select(col("_id"), col("_sh"), col("_bands"))
-        .write.mode("overwrite").parquet(path)
-      // shared index manifest (round 10): the build parameters the
-      // probe/append paths MUST align with are now a recorded
-      // handshake, not a scaladoc discipline; n_docs is the freshness
-      // counter appends bump (the ~30% re-index threshold audit)
-      graft.sinks.Pruning.writeIndexMeta(df.sparkSession, path,
-        graft.sinks.Pruning.IndexMeta("minhash", "", Map(
-          "shingle_size" -> shingleSize.toLong,
-          "num_hashes" -> numHashes.toLong, "bands" -> bands.toLong,
-          "n_docs" -> sigs.count())))
-    } finally sigs.unpersist()
+    val nDocs = writeIndexRows(sign(graft.sources.Tables.widen(df), idCol,
+      textCol, shingleSize, numHashes, bands), "overwrite", path)
+    // shared index manifest (round 10): the build parameters the
+    // probe/append paths MUST align with are now a recorded
+    // handshake, not a scaladoc discipline; n_docs is the freshness
+    // counter appends bump (the ~30% re-index threshold audit)
+    writeMinHashMeta(df.sparkSession, path, shingleSize, numHashes, bands,
+      Some(nDocs))
   }
+
+  /** The persisted index row of a [[sign]]ed doc. */
+  private def indexRows(sigs: DataFrame): DataFrame =
+    sigs.select(col("_id"), col("_sh"), col("_bands"))
+
+  /** Write [[sign]]ed docs as index rows; returns how many, counted by
+    * an observe() metric on the write itself (no second pass).
+    */
+  private[graft] def writeIndexRows(sigs: DataFrame, mode: String,
+      path: String): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    indexRows(sigs).observe(obs, count(lit(1)).as("n"))
+      .write.mode(mode).parquet(path)
+    obs.get("n").asInstanceOf[Long]
+  }
+
+  private def minHashParams(shingleSize: Int, numHashes: Int,
+      bands: Int): Map[String, Long] =
+    Map("shingle_size" -> shingleSize.toLong,
+      "num_hashes" -> numHashes.toLong, "bands" -> bands.toLong)
+
+  /** Publish a MinHash index's manifest record: its build parameters
+    * and, when the writer keeps it current, the `n_docs` freshness
+    * counter (None: no counter, so readers know they have none).
+    */
+  private[graft] def writeMinHashMeta(spark: SparkSession, path: String,
+      shingleSize: Int, numHashes: Int, bands: Int, nDocs: Option[Long]): Unit =
+    graft.sinks.Pruning.writeIndexMeta(spark, path,
+      graft.sinks.Pruning.IndexMeta("minhash", "",
+        minHashParams(shingleSize, numHashes, bands) ++ nDocs.map("n_docs" -> _)))
+
+  /** Manifest handshake: a probe or append with other (shingleSize,
+    * numHashes, bands) than the index build would silently align NO
+    * band keys and report zero duplicates — fail fast instead.
+    */
+  private def requireMinHashParams(spark: SparkSession, path: String,
+      shingleSize: Int, numHashes: Int, bands: Int): Unit =
+    graft.sinks.Pruning.requireIndexParams(spark, path, "minhash",
+      minHashParams(shingleSize, numHashes, bands))
 
   /** Append an increment's signatures to a persisted
     * [[writeMinHashIndex]] index — the daily-job accretion path: after
@@ -401,20 +448,15 @@ object Dedup {
   def appendToMinHashIndex(
       df: DataFrame, path: String, idCol: String, textCol: String,
       shingleSize: Int = 7, numHashes: Int = 96, bands: Int = 24): Unit = {
-    graft.sinks.Pruning.requireIndexParams(df.sparkSession, path, "minhash",
-      Map("shingle_size" -> shingleSize.toLong,
-        "num_hashes" -> numHashes.toLong, "bands" -> bands.toLong))
-    val sigs = shingleBands(df, idCol, textCol, shingleSize, numHashes, bands)
-    try {
-      sigs.select(col("_id"), col("_sh"), col("_bands"))
-        .write.mode("append").parquet(path)
-      // crash between append and bump leaves n_docs understating the
-      // index — benign: probes read signatures directly, the counter
-      // only feeds the re-index-threshold audit (FaultInjectionSpec)
-      graft.sinks.FaultInjection.point("appendToMinHashIndex:appended")
-      graft.sinks.Pruning.bumpIndexMeta(df.sparkSession, path,
-        Map("n_docs" -> sigs.count()))
-    } finally sigs.unpersist()
+    requireMinHashParams(df.sparkSession, path, shingleSize, numHashes, bands)
+    val nDocs = writeIndexRows(sign(graft.sources.Tables.widen(df), idCol,
+      textCol, shingleSize, numHashes, bands), "append", path)
+    // crash between append and bump leaves n_docs understating the
+    // index — benign: probes read signatures directly, the counter
+    // only feeds the re-index-threshold audit (FaultInjectionSpec)
+    graft.sinks.FaultInjection.point("appendToMinHashIndex:appended")
+    graft.sinks.Pruning.bumpIndexMeta(df.sparkSession, path,
+      Map("n_docs" -> nDocs))
   }
 
   /** RETENTION for the persisted index (r7 — closes the "appends
@@ -453,12 +495,22 @@ object Dedup {
     *
     * MUST use the same (shingleSize, numHashes, bands) as the index.
     *
-    * Scale: the join shuffles (band_idx, band_key, id) only; band keys
-    * whose bucket exceeds `maxBucketSize` on EITHER side (an already-
-    * flooded corpus cluster, or a boilerplate-flooded increment) link
-    * each new doc to that bucket's lowest-corpus-id representative
-    * only — component-preserving, O(new) pairs — via the same
-    * broadcast-LocalRelation scheme as [[cappedBandPairs]].
+    * Scale: the increment is widened ([[graft.sources.Tables.widen]])
+    * and signed once — a daily increment can arrive as one parquet
+    * partition, and signing it on one core is the slowdown `widen`
+    * exists for. The index is read with the schema the engine writes
+    * for `_sh`/`_bands` and its own `_id` type, taken from one data
+    * file's footer on the driver, so no footer-inference job runs and
+    * an increment's id type need not match the index's. The join
+    * shuffles (band_idx, band_key, id) only; band keys whose bucket
+    * exceeds `maxBucketSize` on EITHER side (an already-flooded corpus
+    * cluster, or a boilerplate-flooded increment) link each new doc to
+    * that bucket's lowest-corpus-id representative only —
+    * component-preserving, O(new) pairs — via the same
+    * broadcast-LocalRelation scheme as [[cappedBandPairs]]. The bucket
+    * stats aggregate only the index band rows whose key the increment
+    * holds: a key no new doc shares pairs with nothing, so the stats
+    * stay increment-sized and the candidates are unchanged.
     */
   def incrementalNearDupPairs(
       newDocs: DataFrame, indexPath: String, idCol: String, textCol: String,
@@ -468,78 +520,120 @@ object Dedup {
     incrementalNearDupPairsMetered(newDocs, indexPath, idCol, textCol,
       minJaccard, shingleSize, numHashes, bands, maxBucketSize).pairs
 
-  /** [[incrementalNearDupPairs]] with the per-call capped-bucket count. */
+  /** [[incrementalNearDupPairs]] with the per-call capped-bucket count:
+    * the over-cap buckets the increment touches. An over-cap corpus
+    * bucket that no new doc shares is not counted — it cannot
+    * contribute a pair.
+    */
   def incrementalNearDupPairsMetered(
       newDocs: DataFrame, indexPath: String, idCol: String, textCol: String,
       minJaccard: Double = 0.6,
       shingleSize: Int = 7, numHashes: Int = 96, bands: Int = 24,
       maxBucketSize: Int = 10000): CappedPairs = {
-    val spark = newDocs.sparkSession
-    // manifest handshake: a probe with different (shingleSize,
-    // numHashes, bands) than the index build would silently align NO
-    // band keys and report zero duplicates — fail fast instead
-    graft.sinks.Pruning.requireIndexParams(spark, indexPath, "minhash",
-      Map("shingle_size" -> shingleSize.toLong,
-        "num_hashes" -> numHashes.toLong, "bands" -> bands.toLong))
-    val index = spark.read.parquet(indexPath)
-    val sigs = shingleBands(newDocs, idCol, textCol, shingleSize, numHashes, bands)
+    val sigs = sign(graft.sources.Tables.widen(newDocs), idCol, textCol,
+      shingleSize, numHashes, bands).persist()
     try {
-      val newBands = sigs.select(col("_id").as("new_id"),
-        posexplode(col("_bands")).as(Seq("band_idx", "band_key")))
-      val idxBands = index.select(col("_id").as("corpus_id"),
-        posexplode(col("_bands")).as(Seq("band_idx", "band_key")))
-      val keys = Seq("band_idx", "band_key")
-      // A bucket is degenerate when EITHER side floods it: an over-cap
-      // corpus bucket (an already-flooded corpus cluster) OR an
-      // over-cap increment bucket (a boilerplate-heavy increment — the
-      // common daily-dedup input). Either way the full |new|×|idx|
-      // expansion is replaced by star links to the corpus bucket's
-      // representative: O(new) pairs per bucket.
-      val idxAgg = idxBands.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("_n"), min(col("corpus_id")).as("_rep"))
-      val degNewKeys = newBands.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("_n_new"))
-        .filter(col("_n_new") > maxBucketSize)
-        .select(keys.map(col): _*)
-      val degAgg = idxAgg.filter(col("_n") > maxBucketSize)
-        .unionByName(idxAgg.join(degNewKeys, keys, "left_semi"))
-        .dropDuplicates(keys)
-      val degRows = degAgg.collect()
-      lastCappedBucketCount.set(degRows.length.toLong)
-      if (degRows.nonEmpty)
-        log.warn(s"incrementalNearDupPairs: ${degRows.length} bucket(s) over " +
-          s"maxBucketSize=$maxBucketSize (corpus- or increment-side flood) — " +
-          "new docs link to those buckets' corpus representatives only")
-      val degenerate = spark.createDataFrame(
-        java.util.Arrays.asList(degRows: _*), degAgg.schema)
-      val smallIdx = idxBands.join(broadcast(degenerate.select(keys.map(col): _*)),
-        keys, "left_anti")
-      val smallCand = newBands.join(smallIdx, keys)
-        .filter(col("new_id") =!= col("corpus_id"))
-        .select(col("new_id"), col("corpus_id"), lit(false).as("is_star"))
-      val bigCand = newBands.join(broadcast(degenerate), keys)
-        .filter(col("new_id") =!= col("_rep"))
-        .select(col("new_id"), col("_rep").as("corpus_id"), lit(true).as("is_star"))
-      val candidates = smallCand.unionByName(bigCand)
-        .groupBy(col("new_id"), col("corpus_id"))
-        .agg(min(col("is_star")).as("is_star"))
-      val shN = sigs.select(col("_id").as("new_id"), col("_sh").as("_sh_a"))
-      val shC = index.select(col("_id").as("corpus_id"), col("_sh").as("_sh_b"))
-      val overlap = graft.expressions.SortedOverlapExpression
-        .sortedOverlap(col("_sh_a"), col("_sh_b"))
-      val verified = candidates.join(shN, "new_id").join(shC, "corpus_id")
-        .withColumn("_ov", overlap)
-        .withColumn("jaccard",
-          col("_ov").cast(org.apache.spark.sql.types.DoubleType) /
-            (size(col("_sh_a")) + size(col("_sh_b")) - col("_ov"))
-              .cast(org.apache.spark.sql.types.DoubleType))
-        // star pairs pass unconditionally — component preservation, see
-        // the [[cappedBandPairs]] contract
-        .filter(col("jaccard") >= minJaccard || col("is_star"))
-        .select(col("new_id"), col("corpus_id"), col("jaccard"), col("is_star"))
-        .localCheckpoint(true)
-      CappedPairs(verified, degRows.length.toLong)
+      val cp = probeIndex(sigs, indexPath, minJaccard,
+        shingleSize, numHashes, bands, maxBucketSize)
+      cp.copy(pairs = cp.pairs.localCheckpoint(true))
     } finally sigs.unpersist()
+  }
+
+  /** The probe behind [[incrementalNearDupPairsMetered]], over an
+    * increment `sigs` already [[sign]]ed with the given parameters
+    * (the stream sinks pass theirs unwidened: a micro-batch is small,
+    * and a round-robin exchange would be one more shuffle per batch).
+    * The bucket stats run eagerly (one collect); the pairs stay lazy
+    * and read `sigs`, so the caller keeps `sigs` persisted until it has
+    * materialized whatever consumes them.
+    */
+  private[graft] def probeIndex(
+      sigs: DataFrame, indexPath: String, minJaccard: Double,
+      shingleSize: Int, numHashes: Int, bands: Int,
+      maxBucketSize: Int): CappedPairs = {
+    val spark = sigs.sparkSession
+    requireMinHashParams(spark, indexPath, shingleSize, numHashes, bands)
+    val written = indexRows(sigs).schema
+    val index = spark.read.schema(indexIdType(spark, indexPath).fold(written)(t =>
+      StructType(written.map(f => if (f.name == "_id") f.copy(dataType = t) else f))))
+      .parquet(indexPath)
+    val keys = Seq("band_idx", "band_key")
+    val newBands = sigs.select(col("_id").as("new_id"),
+      posexplode(col("_bands")).as(keys))
+    val idxBands = index.select(col("_id").as("corpus_id"),
+      posexplode(col("_bands")).as(keys))
+    // A bucket is degenerate when EITHER side floods it: an over-cap
+    // corpus bucket (an already-flooded corpus cluster) OR an
+    // over-cap increment bucket (a boilerplate-heavy increment — the
+    // common daily-dedup input). Either way the full |new|×|idx|
+    // expansion is replaced by star links to the corpus bucket's
+    // representative: O(new) pairs per bucket. Only the increment's
+    // keys are counted (see Scale above).
+    val newKeys = newBands.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("_n_new"))
+    val degAgg = idxBands.join(newKeys, keys)
+      .groupBy((keys :+ "_n_new").map(col): _*)
+      .agg(count(lit(1)).as("_n"), min(col("corpus_id")).as("_rep"))
+      .filter(col("_n") > maxBucketSize || col("_n_new") > maxBucketSize)
+      .select((keys :+ "_rep").map(col): _*)
+    val degRows = degAgg.collect()
+    lastCappedBucketCount.set(degRows.length.toLong)
+    if (degRows.nonEmpty)
+      log.warn(s"incrementalNearDupPairs: ${degRows.length} bucket(s) over " +
+        s"maxBucketSize=$maxBucketSize (corpus- or increment-side flood) — " +
+        "new docs link to those buckets' corpus representatives only")
+    val degenerate = spark.createDataFrame(
+      java.util.Arrays.asList(degRows: _*), degAgg.schema)
+    val smallIdx = idxBands.join(broadcast(degenerate.select(keys.map(col): _*)),
+      keys, "left_anti")
+    val smallCand = newBands.join(smallIdx, keys)
+      .filter(col("new_id") =!= col("corpus_id"))
+      .select(col("new_id"), col("corpus_id"), lit(false).as("is_star"))
+    val bigCand = newBands.join(broadcast(degenerate), keys)
+      .filter(col("new_id") =!= col("_rep"))
+      .select(col("new_id"), col("_rep").as("corpus_id"), lit(true).as("is_star"))
+    val candidates = smallCand.unionByName(bigCand)
+      .groupBy(col("new_id"), col("corpus_id"))
+      .agg(min(col("is_star")).as("is_star"))
+    val shN = sigs.select(col("_id").as("new_id"), col("_sh").as("_sh_a"))
+    val shC = index.select(col("_id").as("corpus_id"), col("_sh").as("_sh_b"))
+    val overlap = graft.expressions.SortedOverlapExpression
+      .sortedOverlap(col("_sh_a"), col("_sh_b"))
+    val verified = candidates.join(shN, "new_id").join(shC, "corpus_id")
+      .withColumn("_ov", overlap)
+      .withColumn("jaccard",
+        col("_ov").cast(org.apache.spark.sql.types.DoubleType) /
+          (size(col("_sh_a")) + size(col("_sh_b")) - col("_ov"))
+            .cast(org.apache.spark.sql.types.DoubleType))
+      // star pairs pass unconditionally — component preservation, see
+      // the [[cappedBandPairs]] contract
+      .filter(col("jaccard") >= minJaccard || col("is_star"))
+      .select(col("new_id"), col("corpus_id"), col("jaccard"), col("is_star"))
+    CappedPairs(verified, degRows.length.toLong)
+  }
+
+  /** The `_id` type of a MinHash index, from the footer of its first
+    * data file, read on the driver (no Spark job); None when the index
+    * holds no data file. The `_sh`/`_bands` types are the engine's own;
+    * the id type is the caller's, so it is read, not assumed.
+    */
+  private def indexIdType(spark: SparkSession, indexPath: String): Option[DataType] = {
+    import org.apache.hadoop.fs.Path
+    val dir = new Path(indexPath)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = dir.getFileSystem(conf)
+    val first = if (!fs.exists(dir)) None else fs.listStatus(dir).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.map(_.getPath).sortBy(_.getName).headOption
+    first.map { file =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+      try new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+          .convert(reader.getFooter.getFileMetaData.getSchema)("_id").dataType
+      finally reader.close()
+    }
   }
 
   /** SimHash near-dup pairs: 64-bit SimHash per doc, banded by the

@@ -666,14 +666,26 @@ object Urls {
   // index holds only the 60-bit md5 hashes of canonical URLs — raw
   // URL text never lands in the index.
 
-  // no widen before the canonicalize battery: the callers run once per
-  // crawl batch, and a round-robin exchange there is a shuffle per batch
+  /** The one definition of a URL's frontier key: the `keep` columns of
+    * `urls`, the URL's `canonical_url` and its 60-bit md5 `_h` (both
+    * null for a non-URL — no scheme, never fetchable). No widen before
+    * the canonicalize battery: the callers run once per crawl batch,
+    * and a round-robin exchange there is a shuffle per batch.
+    */
+  private def canonical(urls: DataFrame, urlCol: String, keep: Column*): DataFrame =
+    urls.select(keep :+ canonicalize(col(urlCol)).getField("canonical_url")
+        .as("canonical_url"): _*)
+      .withColumn("_h",
+        graft.functions.TextFunctions.md5Hash60(col("canonical_url")))
+
   private def canonicalHashes(urls: DataFrame, urlCol: String) =
-    urls.select(canonicalize(col(urlCol))
-        .getField("canonical_url").as("_c"))
-      .filter(col("_c").isNotNull)
-      .select(graft.functions.TextFunctions.md5Hash60(col("_c")).as("h"))
-      .distinct()
+    canonical(urls, urlCol).filter(col("canonical_url").isNotNull)
+      .select(col("_h").as("h")).distinct()
+
+  /** Manifest handshake: fail fast on an index of another kind. */
+  private def requireFrontier(spark: org.apache.spark.sql.SparkSession,
+      path: String): Unit =
+    graft.sinks.Pruning.requireIndexParams(spark, path, "frontier", Map.empty)
 
   /** Persist the seen-URL set: distinct canonical-URL hashes under
     * `$path/urls` plus the manifest record. Non-URLs (no scheme) are
@@ -700,8 +712,7 @@ object Urls {
     */
   def appendToFrontierIndex(urls: DataFrame, urlCol: String,
       path: String): Unit = {
-    graft.sinks.Pruning.requireIndexParams(urls.sparkSession, path,
-      "frontier", Map.empty)
+    requireFrontier(urls.sparkSession, path)
     val obs = new org.apache.spark.sql.Observation("frontier_index_append")
     canonicalHashes(urls.observe(obs, count(lit(1)).as("n_urls")), urlCol)
       .write.mode("append").parquet(s"$path/urls")
@@ -730,8 +741,7 @@ object Urls {
   def frontierIndexStats(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     import spark.implicits._
-    graft.sinks.Pruning.requireIndexParams(spark, path, "frontier",
-      Map.empty)
+    requireFrontier(spark, path)
     val urlsDir = new org.apache.hadoop.fs.Path(s"$path/urls")
     val fs = urlsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = if (fs.exists(urlsDir))
@@ -765,8 +775,7 @@ object Urls {
     */
   def compactFrontierIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, targetFileBytes: Long = 128L << 20): (Long, Long) = {
-    graft.sinks.Pruning.requireIndexParams(spark, path, "frontier",
-      Map.empty)
+    requireFrontier(spark, path)
     import org.apache.hadoop.fs.Path
     val dst = new Path(s"$path/urls")
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -812,26 +821,10 @@ object Urls {
     */
   def probeFrontier(spark: org.apache.spark.sql.SparkSession, path: String,
       urls: DataFrame, idCol: String, urlCol: String): DataFrame = {
-    graft.sinks.Pruning.requireIndexParams(spark, path, "frontier",
-      Map.empty)
-    // no widen before the canonicalize battery (see canonicalHashes)
-    val canon = urls.select(col(idCol).as("_id"),
-        canonicalize(col(urlCol)).getField("canonical_url")
-          .as("canonical_url"))
-      .withColumn("_h",
-        graft.functions.TextFunctions.md5Hash60(col("canonical_url")))
-    // a missing/empty index is an EMPTY frontier (the bootstrap state
-    // of a brand-new crawl), not an error — the streaming ingest's
-    // first batch probes before anything has been written
-    val urlsDir = new org.apache.hadoop.fs.Path(s"$path/urls")
-    val fs = urlsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasIndex = fs.exists(urlsDir) && fs.listStatus(urlsDir).exists { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    val indexed = (if (hasIndex) spark.read.parquet(s"$path/urls")
-      else spark.range(0).select(col("id").as("h")))
-      .select(col("h").as("_h")).distinct()
+    requireFrontier(spark, path)
+    val canon = canonical(urls, urlCol, col(idCol).as("_id"))
+    val indexed = indexedHashes(spark, path).select(col("h").as("_h"))
+      .distinct()
       .withColumn("_inx", lit(true))
     val first = canon.filter(col("canonical_url").isNotNull)
       .groupBy(col("_h")).agg(min(col("_id")).as("_fid"))
@@ -844,5 +837,43 @@ object Urls {
           col("_id") =!= col("_fid")).as("dup_in_batch"))
       .withColumn("fetch",
         col("is_url") && !col("in_index") && !col("dup_in_batch"))
+  }
+
+  /** The fetchable rows of [[probeFrontier]] (`fetch` = true) as
+    * (idCol, urlCol, canonical_url, `_h` = the canonical hash), in one
+    * plan: the first (lowest id) row per canonical hash, left-anti
+    * joined against the index hashes. No re-join with the batch and no
+    * distinct over the index; each hash appears once. A null-id row is
+    * never fetched, as in [[probeFrontier]] (its `fetch` is null).
+    */
+  private[graft] def frontierFetchSet(spark: org.apache.spark.sql.SparkSession,
+      path: String, urls: DataFrame, idCol: String, urlCol: String): DataFrame = {
+    requireFrontier(spark, path)
+    canonical(urls, urlCol, col(idCol), col(urlCol))
+      .filter(col("canonical_url").isNotNull && col(idCol).isNotNull)
+      .groupBy(col("_h"))
+      .agg(min(struct(col(idCol), col(urlCol), col("canonical_url"))).as("_f"))
+      .join(indexedHashes(spark, path).select(col("h").as("_h")), Seq("_h"),
+        "left_anti")
+      .select(col(s"_f.$idCol"), col(s"_f.$urlCol"), col("_f.canonical_url"),
+        col("_h"))
+  }
+
+  /** The frontier's hash set `h` as written, read with its known schema
+    * (no footer-inference job). A missing or empty index is an EMPTY
+    * frontier (the bootstrap state of a brand-new crawl), not an error
+    * — the streaming ingest's first batch probes before anything has
+    * been written.
+    */
+  private def indexedHashes(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame = {
+    val urlsDir = new org.apache.hadoop.fs.Path(s"$path/urls")
+    val fs = urlsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasIndex = fs.exists(urlsDir) && fs.listStatus(urlsDir).exists { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+    if (hasIndex) spark.read.schema("h BIGINT").parquet(urlsDir.toString)
+    else spark.range(0).select(col("id").as("h"))
   }
 }

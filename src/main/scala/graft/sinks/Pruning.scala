@@ -2,7 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Unified file-skipping: ONE manifest + ONE pruning entry point over
   * the two skipping structures the engine already demonstrates
@@ -229,19 +229,29 @@ object Pruning {
       hadPrior = fs.exists(dst))
   }
 
+  /** The record's fixed layout, as [[writeIndexMeta]] writes it. */
+  private val indexMetaSchema = StructType(Seq(
+    StructField("kind", StringType), StructField("part_col", StringType),
+    StructField("param", StringType), StructField("value", LongType)))
+
   /** Read an index manifest back; None when the artifact predates the
     * convention (readers stay lenient for those, strict once present).
+    * Absence is one `exists` call, not a caught Spark read failure, and
+    * the known schema spares the read its footer-inference job: the
+    * stream sinks consult this on every micro-batch.
     */
-  def readIndexMeta(spark: SparkSession, path: String): Option[IndexMeta] =
-    try {
-      val rows = spark.read
-        .parquet(s"${manifestDir(path)}/index_meta").collect()
+  def readIndexMeta(spark: SparkSession, path: String): Option[IndexMeta] = {
+    import org.apache.hadoop.fs.Path
+    val dir = new Path(s"${manifestDir(path)}/index_meta")
+    if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)) None
+    else {
+      val rows = spark.read.schema(indexMetaSchema).parquet(dir.toString).collect()
       rows.headOption.map { h =>
-        IndexMeta(h.getAs[String]("kind"), h.getAs[String]("part_col"),
-          rows.map(r => r.getAs[String]("param") -> r.getAs[Long]("value"))
-            .toMap)
+        IndexMeta(h.getString(0), h.getString(1),
+          rows.map(r => r.getString(2) -> r.getLong(3)).toMap)
       }
-    } catch { case _: org.apache.spark.sql.AnalysisException => None }
+    }
+  }
 
   /** Freshness bump for append paths: add `deltas` to the named
     * counters (missing counters start at 0). Metadata-sized rewrite;

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -37,10 +37,28 @@ import graft.operators.Dedup
   * redoes the batch. The marker create is the single commit point.
   * The unkeyed path (`batchId = None`, direct batch calls) keeps the
   * plain append semantics: at-least-once on caller-managed retry.
+  * Both paths publish the index manifest (`_graft_manifest`, the
+  * MinHash build parameters) with the bootstrap batch, so a later
+  * batch whose `numHashes`/`bands`/`shingleSize` differ throws instead
+  * of silently matching nothing. The keyed path's manifest carries no
+  * `n_docs` counter (its commit markers are the ledger); the unkeyed
+  * path's counter is bumped per batch.
+  *
+  * Scale: ONE signature pass per batch. The batch's shingle sets,
+  * signatures and band keys are computed once, unwidened, and serve
+  * the probe, its verification and the survivors' index rows. The
+  * probe reads the index with its written schema (no footer-inference
+  * job) and aggregates only the index band rows whose key the batch
+  * holds. The survivor count rides the survivors' checkpoint as an
+  * observe() metric. No round-robin shuffle runs, and a batch adds one
+  * index file per input partition (one for a one-file micro-batch)
+  * instead of `defaultParallelism` files. The work that still grows
+  * with the index is the scan of its band keys and of the candidates'
+  * shingle sets — never a recompute of a historical signature.
   */
 object CorpusIngest {
 
-  import org.apache.hadoop.fs.{FileSystem, Path}
+  import org.apache.hadoop.fs.Path
 
   import BatchCommit.{cleanBatchFiles, hasData, moveIn}
 
@@ -60,37 +78,58 @@ object CorpusIngest {
     val idx = new Path(indexPath)
     val fs = idx.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    def dedupAndMaterialize(): DataFrame = {
-      val survivors =
-        if (!hasData(fs, idx)) batch
-        else {
-          val matched = Dedup.incrementalNearDupPairs(batch, indexPath,
-              idCol, textCol, minJaccard,
-              shingleSize, numHashes, bands, maxBucketSize)
-            .select(col("new_id").as(idCol)).distinct()
-          batch.join(matched, Seq(idCol), "left_anti")
-        }
-      // one materialization serves both writes (corpus + index) — the
-      // anti-join would otherwise recompute per sink
-      survivors.localCheckpoint(true)
+    /** One signature pass: sign the batch, dedup it against the index,
+      * materialize the survivors once (their count rides the
+      * checkpoint as an observe() metric), then hand `commit` the
+      * survivors, their signatures (the same frame, semi-joined to the
+      * survivors) and the bootstrap flag. Returns the survivor
+      * count.
+      */
+    def ingest(commit: (DataFrame, DataFrame, Boolean) => Unit): Long = {
+      val bootstrap = !hasData(fs, idx)
+      val sigs = Dedup.sign(batch, idCol, textCol, shingleSize, numHashes,
+        bands).persist()
+      var surv: DataFrame = null
+      try {
+        val kept =
+          if (bootstrap) batch
+          else batch.join(
+            Dedup.probeIndex(sigs, indexPath, minJaccard, shingleSize,
+              numHashes, bands, maxBucketSize).pairs
+              .select(col("new_id").as(idCol)),
+            Seq(idCol), "left_anti")
+        val obs = Observation()
+        // one materialization serves both writes (corpus + index) — the
+        // anti-join would otherwise recompute per sink
+        surv = kept.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
+        val n = obs.get("n").asInstanceOf[Long]
+        // null-safe: a null-id survivor gets its index row, as
+        // writeMinHashIndex/appendToMinHashIndex would give it
+        commit(surv, sigs.join(surv.select(col(idCol).as("_sid")),
+          col("_id") <=> col("_sid"), "left_semi"), bootstrap)
+        n
+      } finally {
+        sigs.unpersist()
+        // both sinks consumed the materialization — a long-running
+        // stream must not accumulate one survivors frame per batch
+        if (surv != null) graft.plans.Checkpoints.drop(surv)
+      }
     }
+
+    def publishMeta(nDocs: Option[Long]): Unit =
+      Dedup.writeMinHashMeta(spark, indexPath, shingleSize, numHashes, bands, nDocs)
 
     batchId match {
       case None =>
         // unkeyed: plain appends, at-least-once under caller retry
-        val surv = dedupAndMaterialize()
-        surv.write.mode("append").parquet(corpusPath)
-        if (hasData(fs, idx))
-          Dedup.appendToMinHashIndex(surv, indexPath, idCol, textCol,
-            shingleSize, numHashes, bands)
-        else
-          Dedup.writeMinHashIndex(surv, indexPath, idCol, textCol,
-            shingleSize, numHashes, bands)
-        val n = surv.count()
-        // both sinks consumed the materialization — a long-running
-        // stream must not accumulate one survivors frame per batch
-        graft.plans.Checkpoints.drop(surv)
-        n
+        ingest { (surv, sigs, bootstrap) =>
+          surv.write.mode("append").parquet(corpusPath)
+          val nDocs = Dedup.writeIndexRows(sigs,
+            if (bootstrap) "overwrite" else "append", indexPath)
+          if (bootstrap) publishMeta(Some(nDocs))
+          else graft.sinks.Pruning.bumpIndexMeta(spark, indexPath,
+            Map("n_docs" -> nDocs))
+        }
 
       case Some(id) =>
         val corpus = new Path(corpusPath)
@@ -103,23 +142,23 @@ object CorpusIngest {
           // the anti-join sees exactly the pre-batch index state
           cleanBatchFiles(fs, corpus, id)
           cleanBatchFiles(fs, idx, id)
-          val surv = dedupAndMaterialize()
-          val n = surv.count()
           val stagingCorpus = new Path(s"$corpusPath.staging-batch-$id")
           val stagingIndex = new Path(s"$indexPath.staging-batch-$id")
-          Seq(stagingCorpus, stagingIndex).foreach(p => fs.delete(p, true): Unit)
-          surv.write.mode("overwrite").parquet(stagingCorpus.toString)
-          // writeMinHashIndex(overwrite-to-staging) serves bootstrap
-          // and append alike: the move makes it an append
-          Dedup.writeMinHashIndex(surv, stagingIndex.toString, idCol,
-            textCol, shingleSize, numHashes, bands)
-          moveIn(fs, stagingCorpus, corpus, id)
-          moveIn(fs, stagingIndex, idx, id)
+          val committed = ingest { (surv, sigs, bootstrap) =>
+            Seq(stagingCorpus, stagingIndex).foreach(p => fs.delete(p, true): Unit)
+            surv.write.mode("overwrite").parquet(stagingCorpus.toString)
+            Dedup.writeIndexRows(sigs, "overwrite", stagingIndex.toString): Unit
+            moveIn(fs, stagingCorpus, corpus, id)
+            moveIn(fs, stagingIndex, idx, id)
+            // the bootstrap publishes the build parameters, so every
+            // later batch's probe checks its own against them — but no
+            // n_docs counter: keyed batches never bump it (the markers
+            // are the ledger), and a frozen count would only mislead
+            if (bootstrap) publishMeta(None)
+          }
           // single atomic commit point (see BatchCommit.writeMarker)
-          BatchCommit.writeMarker(fs, corpusPath, id, n)
-          // committed: the batch's materialized survivors are dead
-          graft.plans.Checkpoints.drop(surv)
-          n
+          BatchCommit.writeMarker(fs, corpusPath, id, committed)
+          committed
         }
     }
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -38,10 +38,15 @@ import graft.operators.Urls
   * (`_graft_manifest`) is not maintained on this path — probes are
   * lenient to its absence by design.
   *
-  * Scale: per batch, ONE hash-keyed probe against an index READ plus
-  * two batch-sized writes. The index grows one 8-byte hash per
-  * fetched page — ~80 GB of index for 10¹⁰ pages, a broadcast-guarded
-  * or shuffled join either way, never a recompute of crawl history.
+  * Scale: per batch, ONE plan builds the fetch set — the first
+  * (id, url, canonical_url) per canonical hash, left-anti joined
+  * against the index hashes, which are read with their written schema
+  * (no footer-inference job) and never de-duplicated as a whole. No
+  * re-join with the batch; the fetched count rides the checkpoint as
+  * an observe() metric; then two batch-sized writes, the index one
+  * hash per fetched row. The index grows one 8-byte hash per fetched
+  * page — ~80 GB of index for 10¹⁰ pages, a broadcast-guarded or
+  * shuffled join either way, never a recompute of crawl history.
   */
 object FrontierIngest {
 
@@ -65,24 +70,29 @@ object FrontierIngest {
     val fsIdx = new Path(indexPath).getFileSystem(hconf)
     val fsLog = new Path(logPath).getFileSystem(hconf)
 
-    def probeAndMaterialize(): DataFrame =
-      Urls.probeFrontier(spark, indexPath, batch, idCol, urlCol)
-        .filter(col("fetch"))
-        .join(batch.select(col(idCol), col(urlCol)), Seq(idCol))
-        .select(col(idCol), col(urlCol), col("canonical_url"))
-        // one materialization serves both writes (log + index)
+    /** The fetch set, materialized once for both writes (log +
+      * index), with its row count riding the checkpoint as an
+      * observe() metric.
+      */
+    def probeAndMaterialize(): (DataFrame, Long) = {
+      val obs = Observation()
+      val surv = Urls.frontierFetchSet(spark, indexPath, batch, idCol, urlCol)
+        .observe(obs, count(lit(1)).as("n"))
         .localCheckpoint(true)
+      (surv, obs.get("n").asInstanceOf[Long])
+    }
 
-    def hashes(surv: DataFrame): DataFrame =
-      surv.select(graft.functions.TextFunctions
-        .md5Hash60(col("canonical_url")).as("h")).distinct()
+    def logRows(surv: DataFrame): DataFrame =
+      surv.select(col(idCol), col(urlCol), col("canonical_url"))
+
+    // one hash per fetched row: the fetch set is first-per-hash
+    def hashes(surv: DataFrame): DataFrame = surv.select(col("_h").as("h"))
 
     batchId match {
       case None =>
-        val surv = probeAndMaterialize()
-        surv.write.mode("append").parquet(logPath)
+        val (surv, n) = probeAndMaterialize()
+        logRows(surv).write.mode("append").parquet(logPath)
         hashes(surv).write.mode("append").parquet(s"$indexPath/urls")
-        val n = surv.count()
         // both sinks consumed the materialization — a long-running
         // stream must not accumulate one frame per batch
         graft.plans.Checkpoints.drop(surv)
@@ -100,13 +110,12 @@ object FrontierIngest {
           // the probe sees exactly the pre-batch index state
           cleanBatchFiles(fsLog, log, id)
           cleanBatchFiles(fsIdx, urlsDir, id)
-          val surv = probeAndMaterialize()
-          val n = surv.count()
+          val (surv, n) = probeAndMaterialize()
           val stagingLog = new Path(s"$logPath.staging-batch-$id")
           val stagingIdx = new Path(s"$indexPath.staging-batch-$id")
           fsLog.delete(stagingLog, true): Unit
           fsIdx.delete(stagingIdx, true): Unit
-          surv.write.mode("overwrite").parquet(stagingLog.toString)
+          logRows(surv).write.mode("overwrite").parquet(stagingLog.toString)
           hashes(surv).write.mode("overwrite").parquet(stagingIdx.toString)
           moveIn(fsLog, stagingLog, log, id)
           moveIn(fsIdx, stagingIdx, urlsDir, id)

@@ -250,6 +250,20 @@ class DedupSpec extends SparkSpec {
     assert(inc.forall(_._1 < 100010L))
   }
 
+  test("incremental near-dup: an Int-id increment probes a Long-id index") {
+    // the index keeps its own id type (read from a footer), the
+    // increment keeps the caller's: the two need not match
+    val idxPath = java.nio.file.Files.createTempDirectory("graft-mh-ids").toString + "/idx"
+    val corpus = Tables.documents(spark, sfDir).filter(col("doc_id") < 20)
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    Dedup.writeMinHashIndex(corpus, idxPath, "doc_id", "text")
+    val increment = corpus.filter(col("doc_id") < 5)
+      .select((col("doc_id") + 1000).cast("int").as("doc_id"), col("text"))
+    val got = Dedup.incrementalNearDupPairs(increment, idxPath, "doc_id", "text")
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
+    (0 until 5).foreach(i => assert(got.contains((i + 1000, i.toLong)), s"doc $i: $got"))
+  }
+
   test("connected components: min-label propagation across chains and stars") {
     import spark.implicits._
     // path graph 10-11-12-13-14 (diameter 4: exercises multi-round

@@ -511,6 +511,27 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("Exchange") && !plan.contains("RoundRobinPartitioning"), plan)
   }
 
+  test("a keyed corpus-ingest batch plans no round-robin exchange") {
+    // CorpusIngest runs once per micro-batch: a widen in its signature
+    // pass would be one more shuffle on every batch
+    import spark.implicits._
+    import graft.streaming.CorpusIngest
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cplan").toString
+    // doc i's text is a function of i % 100: doc 110 repeats doc 10
+    def ingest(ids: Range, id: Long): Long = CorpusIngest.ingestBatch(
+      ids.map(i => (i.toLong, (0 until 12).map(k => java.lang.Long.toHexString(
+        ((i % 100) * 7919L + k) * 2654435761L & 0xffffffffffL)).mkString(" ")))
+        .toDF("doc_id", "text"),
+      s"$tmp/idx", s"$tmp/out", "doc_id", "text", batchId = Some(id))
+    ingest(0 until 20, 0L): Unit
+    var kept = 0L
+    val plans = SparkEvents.capture(spark) { kept = ingest(110 until 140, 1L) }.plans
+    assert(kept == 20L, "the 10 repeated docs must drop")
+    assert(plans.exists(_.contains("Exchange")), plans.mkString("\n"))
+    val bad = plans.filter(_.contains("RoundRobinPartitioning"))
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("hot aggregation queries stay inside whole-stage codegen") {
     // "*(n)" marks operators fused into a generated stage; a plan with
     // none at all has fallen out of codegen entirely. Codegen insertion

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -440,6 +441,163 @@ class StreamingSpec extends SparkSpec {
     assert(fs.listStatus(new Path(log)).map(_.getPath.getName).toSet == before)
     // index holds exactly one hash per fetched canonical
     assert(spark.read.parquet(s"$idx/urls").distinct().count() == 40)
+  }
+
+  // ---- keyed corpus + frontier ingest over planted batches ----
+
+  /** Hex-token bodies: cross-doc 7-shingle overlap ≈ 0, so only the
+    * planted rewrites are near-dups. */
+  private def hexBody(i: Int): String =
+    (0 until 15).map(k => java.lang.Long.toHexString(
+      (i.toLong * 1000003 + k) * 2654435761L & 0xffffffffffL)).mkString(" ")
+
+  /** Batch `b` of a planted (doc_id, text, url) stream, written to
+    * parquet under `dir` and read back, as a file source hands a
+    * micro-batch over. Every batch holds 30 fresh docs, a non-URL, an
+    * in-batch URL twin and two null-id rows: one with a URL of its own,
+    * one respelling a fresh doc's URL. Batch 0 adds 4 copies of one boilerplate
+    * text, so the index holds a 4-member bucket in every band. Later
+    * batches add 4 truncated rewrites of the previous batch's docs
+    * under respelled URLs and one more boilerplate copy; batch 2 adds
+    * a 4-copy increment-side flood of a rewrite of doc 101.
+    */
+  private def plantedBatch(dir: String, b: Int): DataFrame = {
+    import spark.implicits._
+    def url(i: Int) = s"https://h${i % 7}.example.com/p/$i"
+    val base = b * 100
+    val fresh = (base until base + 30).map(i => (i.toLong, hexBody(i), url(i)))
+    val odd = Seq(
+      (base + 80L, hexBody(base + 80), "not a url"),
+      (base + 81L, hexBody(base + 81), url(base) + "?fbclid=1"))
+    val boiler = hexBody(99999)
+    val plants =
+      if (b == 0) (0 until 4).map(k =>
+        (900L + k, boiler, s"https://boiler.example.org/$k"))
+      else (0 until 4).map { k =>
+        val i = base - 100 + k
+        (base + 50L + k, hexBody(i).dropRight(10),
+          s"HTTPS://H${i % 7}.EXAMPLE.com:443/p/$i?utm_source=x$b")
+      } :+ ((base + 60L, boiler, s"https://boiler.example.org/0?gclid=$b"))
+    val flood =
+      if (b == 2) (0 until 4).map(k =>
+        (base + 70L + k, hexBody(101).dropRight(6), url(101) + s"#f$k"))
+      else Nil
+    val nullIds = Seq(
+      (None, hexBody(base + 90), url(base + 90)),
+      (None, hexBody(base + 91), url(base + 1) + "?fbclid=n"))
+    val path = s"$dir/batch$b.parquet"
+    ((fresh ++ odd ++ plants ++ flood).map { case (i, t, u) => (Option(i), t, u) } ++
+      nullIds).toDF("doc_id", "text", "url")
+      .coalesce(1).write.mode("overwrite").parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** One keyed micro-batch through both ingest sinks, as a stream runs them. */
+  private def ingestKeyed(batch: DataFrame, dir: String, id: Long,
+      maxBucketSize: Int = 10000): (Long, Long) = {
+    import graft.streaming.{CorpusIngest, FrontierIngest}
+    (CorpusIngest.ingestBatch(batch.select("doc_id", "text"),
+        s"$dir/cidx", s"$dir/corpus", "doc_id", "text", minJaccard = 0.5,
+        maxBucketSize = maxBucketSize, batchId = Some(id)),
+      FrontierIngest.ingestBatch(batch.select("doc_id", "url"),
+        s"$dir/uidx", s"$dir/log", "doc_id", "url", batchId = Some(id)))
+  }
+
+  /** A row's leading id, None when null. */
+  private def id(r: org.apache.spark.sql.Row): Option[Long] =
+    if (r.isNullAt(0)) None else Some(r.getLong(0))
+
+  test("keyed corpus + frontier ingest equals the public batch operators " +
+      "(planted near-dups, respelled URLs, star links)") {
+    import graft.operators.{Dedup, Urls}
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-eq").toString
+    val cap = 3 // the boilerplate bucket (4 copies) and the flood trip it
+    val refIdx = s"$tmp/ref-cidx"
+    val refUidx = s"$tmp/ref-uidx"
+    var refCorpus = Set.empty[(Option[Long], String)]
+    var refLog = Set.empty[(Long, String, String)]
+    var capped = 0L
+    (0 until 4).foreach { b =>
+      val batch = plantedBatch(tmp, b)
+      ingestKeyed(batch, tmp, b.toLong, cap): Unit
+      // reference: the public batch operators, one step at a time
+      val docs = batch.select("doc_id", "text")
+      val survivors =
+        if (b == 0) docs
+        else {
+          val cp = Dedup.incrementalNearDupPairsMetered(docs, refIdx,
+            "doc_id", "text", minJaccard = 0.5, maxBucketSize = cap)
+          capped += cp.cappedBucketCount
+          docs.join(cp.pairs.select(col("new_id").as("doc_id")).distinct(),
+            Seq("doc_id"), "left_anti")
+        }
+      refCorpus ++= survivors.collect().map(r => (id(r), r.getString(1)))
+      if (b == 0) Dedup.writeMinHashIndex(survivors, refIdx, "doc_id", "text")
+      else Dedup.appendToMinHashIndex(survivors, refIdx, "doc_id", "text")
+      val urls = batch.select("doc_id", "url")
+      val fetched = Urls.probeFrontier(spark, refUidx, urls, "doc_id", "url")
+        .filter("fetch").join(urls, Seq("doc_id"))
+        .select("doc_id", "url", "canonical_url").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      refLog ++= fetched
+      val fetchedDf = spark.createDataFrame(fetched.toSeq).toDF("doc_id", "url", "c")
+      if (b == 0) Urls.writeFrontierIndex(fetchedDf, "url", refUidx)
+      else Urls.appendToFrontierIndex(fetchedDf, "url", refUidx)
+    }
+    // the plants fired: star links, dropped rewrites, unfetched respellings
+    assert(capped > 0, "no bucket went over the cap")
+    assert(!refCorpus.exists(_._1.contains(160L)) && refCorpus.exists(_._1.contains(129L)))
+    assert(!refLog.exists(_._1 == 150L) && !refLog.exists(_._1 == 81L))
+    assert(refCorpus.count(_._1.isEmpty) == 8, "the null-id docs are kept")
+    assert(refLog.exists(_._1 == 101L), "the null-id respelling does not win doc 101's URL")
+
+    def index(p: String) = spark.read.parquet(p)
+      .select(col("_id"), col("_sh"), col("_bands")).collect()
+      .map(r => (id(r), r.getSeq[String](1), r.getSeq[Long](2)))
+      .sortBy(r => (r._1, r._3.mkString(","))).toSeq
+    def hashes(p: String) =
+      spark.read.parquet(s"$p/urls").collect().map(_.getLong(0)).sorted.toSeq
+    val corpus = spark.read.parquet(s"$tmp/corpus").collect()
+      .map(r => (id(r), r.getString(1))).toSet
+    val log = spark.read.parquet(s"$tmp/log").collect()
+      .map(r => (id(r), r.getString(1), r.getString(2))).toSet
+    assert(corpus == refCorpus, s"corpus ${corpus.map(_._1)} != ${refCorpus.map(_._1)}")
+    assert(index(s"$tmp/cidx") == index(refIdx), "index rows differ")
+    val wantLog = refLog.map { case (i, u, c) => (Option(i), u, c) }
+    assert(log -- wantLog == Set.empty && wantLog -- log == Set.empty, "fetch log differs")
+    assert(hashes(s"$tmp/uidx") == hashes(refUidx), "URL hashes differ")
+  }
+
+  test("keyed corpus ingest publishes the index manifest: a batch with " +
+      "other MinHash parameters throws, a committed replay stays a no-op") {
+    import graft.streaming.CorpusIngest
+    import org.apache.hadoop.fs.Path
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-meta").toString
+    val (idx, out) = (s"$tmp/cidx", s"$tmp/corpus")
+    val fs = new Path(tmp).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val b0 = plantedBatch(tmp, 0).select("doc_id", "text")
+    val b1 = plantedBatch(tmp, 1).select("doc_id", "text")
+    val n0 = CorpusIngest.ingestBatch(b0, idx, out, "doc_id", "text",
+      minJaccard = 0.5, batchId = Some(0L))
+    val meta = graft.sinks.Pruning.readIndexMeta(spark, idx)
+    assert(meta.map(_.params("num_hashes")).contains(96L), s"manifest: $meta")
+    val err = intercept[IllegalArgumentException](
+      CorpusIngest.ingestBatch(b1, idx, out, "doc_id", "text",
+        minJaccard = 0.5, numHashes = 64, bands = 16, batchId = Some(1L)))
+    assert(err.getMessage.contains("num_hashes=96"), err.getMessage)
+    assert(!fs.exists(new Path(out, "_committed-batch-1")))
+    val files = fs.listStatus(new Path(out)).map(_.getPath.getName).toSet
+    assert(CorpusIngest.ingestBatch(b0, idx, out, "doc_id", "text",
+      minJaccard = 0.5, batchId = Some(0L)) == n0)
+    assert(fs.listStatus(new Path(out)).map(_.getPath.getName).toSet == files)
+  }
+
+  test("a steady keyed corpus + frontier batch runs at most 32 Spark jobs") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-jobs").toString
+    (0 until 2).foreach(b => ingestKeyed(plantedBatch(tmp, b), tmp, b.toLong): Unit)
+    val batch = plantedBatch(tmp, 2)
+    val jobs = SparkEvents.capture(spark)(ingestKeyed(batch, tmp, 2L): Unit).jobs
+    assert(jobs.size <= 32, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
   }
 
   test("streaming geofence alerts == batch fenceTransitions across triggers") {
