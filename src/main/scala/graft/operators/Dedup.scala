@@ -7,11 +7,10 @@ import org.apache.spark.sql.types._
 import graft.plans.Checkpoints
 
 /** A near-dup pair result plus the number of degenerate (over-cap)
-  * buckets THIS call saw — the reliable, per-call form of the
-  * best-effort [[Dedup.lastCappedBucketCount]] global.
-  * `cappedBucketCount == 0` ⇒ the pair output is complete (no bucket
-  * hit the cap and no `is_star` row exists); `> 0` ⇒ that many buckets
-  * were star-linked (their pairs carry `is_star = true`).
+  * buckets THIS call saw. `cappedBucketCount == 0` ⇒ the pair output
+  * is complete (no bucket hit the cap and no `is_star` row exists);
+  * `> 0` ⇒ that many buckets were star-linked (their pairs carry
+  * `is_star = true`).
   */
 final case class CappedPairs(pairs: DataFrame, cappedBucketCount: Long)
 
@@ -210,17 +209,6 @@ object Dedup {
     * through the representative), never a lost duplicate; consumers
     * that want verified pairs only can `filter(!col("is_star"))`.
     */
-  /** Best-effort diagnostic: number of degenerate (capped) buckets seen
-    * by the most recent capped-band operator call in this JVM (for the
-    * incremental probe: the over-cap buckets the increment touches). One
-    * global last-write-wins cell — concurrent operator calls in the
-    * same session clobber each other, so for anything load-bearing use
-    * the `*Metered` operator variants, which return the count PER CALL
-    * in [[CappedPairs]]. A capped run is also logged at WARN, and its
-    * pairs are identifiable in-band via the `is_star` column.
-    */
-  val lastCappedBucketCount = new java.util.concurrent.atomic.AtomicLong(0L)
-
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private def cappedBandPairs(
@@ -245,7 +233,6 @@ object Dedup {
       .agg(count(lit(1)).as("_n"), min(col("_id")).as("_rep"))
       .filter(col("_n") > maxBucketSize)
     val degRows = degAgg.collect()
-    lastCappedBucketCount.set(degRows.length.toLong)
     if (degRows.nonEmpty)
       log.warn(s"cappedBandPairs: ${degRows.length} bucket(s) exceeded maxBucketSize=$maxBucketSize — " +
         "their pairs are star-linked to the bucket representative (component-preserving, NOT all-pairs)")
@@ -498,10 +485,10 @@ object Dedup {
     * Scale: the increment is widened ([[graft.sources.Tables.widen]])
     * and signed once — a daily increment can arrive as one parquet
     * partition, and signing it on one core is the slowdown `widen`
-    * exists for. The index is read with the schema the engine writes
-    * for `_sh`/`_bands` and its own `_id` type, taken from one data
-    * file's footer on the driver, so no footer-inference job runs and
-    * an increment's id type need not match the index's. The join
+    * exists for. The index is read through [[graft.sources.Tables.read]]
+    * (its schema, `_id` type included, comes from one data file's
+    * footer on the driver, so no footer-inference job runs), and an
+    * increment's id type need not match the index's. The join
     * shuffles (band_idx, band_key, id) only; band keys whose bucket
     * exceeds `maxBucketSize` on EITHER side (an already-flooded corpus
     * cluster, or a boilerplate-flooded increment) link each new doc to
@@ -553,10 +540,7 @@ object Dedup {
       maxBucketSize: Int): CappedPairs = {
     val spark = sigs.sparkSession
     requireMinHashParams(spark, indexPath, shingleSize, numHashes, bands)
-    val written = indexRows(sigs).schema
-    val index = spark.read.schema(indexIdType(spark, indexPath).fold(written)(t =>
-      StructType(written.map(f => if (f.name == "_id") f.copy(dataType = t) else f))))
-      .parquet(indexPath)
+    val index = graft.sources.Tables.read(spark, indexPath)
     val keys = Seq("band_idx", "band_key")
     val newBands = sigs.select(col("_id").as("new_id"),
       posexplode(col("_bands")).as(keys))
@@ -577,7 +561,6 @@ object Dedup {
       .filter(col("_n") > maxBucketSize || col("_n_new") > maxBucketSize)
       .select((keys :+ "_rep").map(col): _*)
     val degRows = degAgg.collect()
-    lastCappedBucketCount.set(degRows.length.toLong)
     if (degRows.nonEmpty)
       log.warn(s"incrementalNearDupPairs: ${degRows.length} bucket(s) over " +
         s"maxBucketSize=$maxBucketSize (corpus- or increment-side flood) — " +
@@ -610,30 +593,6 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard || col("is_star"))
       .select(col("new_id"), col("corpus_id"), col("jaccard"), col("is_star"))
     CappedPairs(verified, degRows.length.toLong)
-  }
-
-  /** The `_id` type of a MinHash index, from the footer of its first
-    * data file, read on the driver (no Spark job); None when the index
-    * holds no data file. The `_sh`/`_bands` types are the engine's own;
-    * the id type is the caller's, so it is read, not assumed.
-    */
-  private def indexIdType(spark: SparkSession, indexPath: String): Option[DataType] = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(indexPath)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = dir.getFileSystem(conf)
-    val first = if (!fs.exists(dir)) None else fs.listStatus(dir).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(_.getPath).sortBy(_.getName).headOption
-    first.map { file =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-      try new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(spark.sessionState.conf)
-          .convert(reader.getFooter.getFileMetaData.getSchema)("_id").dataType
-      finally reader.close()
-    }
   }
 
   /** SimHash near-dup pairs: 64-bit SimHash per doc, banded by the
@@ -952,8 +911,7 @@ object Dedup {
     * exact case dedup exists for) star-link to the bucket-min
     * representative: O(bucket) pairs, connected component preserved, so
     * keep-lowest-id dedup downstream is unaffected. Same completeness
-    * caveat as [[verifiedNearDupPairs]] — see [[cappedBandPairs]] and
-    * [[lastCappedBucketCount]].
+    * caveat as [[verifiedNearDupPairs]] — see [[cappedBandPairs]].
     *
     * Chunk width (`nBits / nChunks`) is the recall/cost dial: wider
     * chunks → smaller buckets (2^chunkBits values per chunk) but lower

@@ -115,7 +115,7 @@ object Phrase {
     graft.sinks.Pruning.requireIndexParams(spark, path, "positional",
       Map("n_buckets" -> nBuckets.toLong))
     val buckets = terms.distinct.map(Ranking.md5BucketOf(_, nBuckets))
-    val pos = spark.read.parquet(s"$path/postings")
+    val pos = graft.sources.Tables.read(spark, s"$path/postings")
       .filter(col("tb").isin(buckets.distinct: _*) &&
         col("term").isin(terms.distinct: _*))
       .select(col("_id"), col("pos"), col("term"))
@@ -159,7 +159,7 @@ object Phrase {
         (pid.toLong, t, i.toLong, ts.length.toLong)
       }
     }.toDF("phrase_id", "term", "_i", "_len")
-    val pos = spark.read.parquet(s"$path/postings")
+    val pos = graft.sources.Tables.read(spark, s"$path/postings")
       .filter(col("tb").isin(buckets: _*) &&
         col("term").isin(allTerms: _*))
       .select(col("_id"), col("pos"), col("term"))

@@ -184,7 +184,7 @@ object Ranking {
         (meta.params("n_docs"), meta.params("sum_dl"))
       case None =>
         val st =
-          try spark.read.parquet(s"$path/_stats").collect()(0)
+          try graft.sources.Tables.read(spark, s"$path/_stats").collect()(0)
           catch { case _: org.apache.spark.sql.AnalysisException =>
             throw new IllegalStateException(
               s"no index manifest (and no legacy _stats sidecar) at " +
@@ -193,7 +193,7 @@ object Ranking {
         (st.getLong(0), st.getLong(1))
     }
     val buckets = queryTerms.map(t => md5BucketOf(t, nBuckets)).distinct
-    val tf = spark.read.parquet(s"$path/postings")
+    val tf = graft.sources.Tables.read(spark, s"$path/postings")
       .filter(col("tb").isin(buckets: _*) &&
         col("term").isin(queryTerms: _*))
       .select(col("_id"), col("term").as("_term"),

@@ -116,7 +116,7 @@ object SentenceDedup {
       "spanhash", Map("span_len" -> spanLen.toLong))
     val base = segmented(docs, idCol, textCol)
     val occ = occurrences(base, spanLen)
-    val indexed = spark.read.parquet(s"$path/spans")
+    val indexed = graft.sources.Tables.read(spark, s"$path/spans")
       .select(col("h").as("_h")).distinct()
     val inIndex = occ.join(indexed, Seq("_h"), "left_semi")
       .select(col("_id"), col("_pos"))

@@ -228,7 +228,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String,
       newVectors: DataFrame, idCol: String, vecCol: String,
       literalCellBudget: Int = maxLiteralCells): Unit = {
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = graft.sources.Tables.read(spark, s"$path/centroids")
     assignToCentroid(newVectors, centroids, idCol, vecCol, "neighbor_id",
       literalCellBudget)
       .select(col("neighbor_id"), col("_cv").as("embedding"), col("centroid_id"))
@@ -259,7 +259,7 @@ object Similarity {
     // manifest handshake (lenient on pre-manifest artifacts): a
     // non-IVF index probed here fails fast instead of mis-reading
     graft.sinks.Pruning.requireIndexParams(spark, path, "ivf", Map.empty)
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = graft.sources.Tables.read(spark, s"$path/centroids")
     // materialized once: both the centroid-id collect below AND the
     // final join read `probed` — unchecked, the scoring projection
     // (nlist cosines per query row) would execute twice
@@ -272,7 +272,7 @@ object Similarity {
     // getLong would reject with a ClassCastException at query time
     val probedCentroids = probed.select(col("centroid_id"))
       .distinct().collect().map(_.getAs[Number](0).longValue).toSeq
-    val index = spark.read.parquet(s"$path/index")
+    val index = graft.sources.Tables.read(spark, s"$path/index")
       .filter(col("centroid_id").isin(probedCentroids: _*))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(desc("cosine"), asc("neighbor_id"))

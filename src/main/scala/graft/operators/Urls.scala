@@ -744,15 +744,11 @@ object Urls {
     requireFrontier(spark, path)
     val urlsDir = new org.apache.hadoop.fs.Path(s"$path/urls")
     val fs = urlsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = if (fs.exists(urlsDir))
-      fs.listStatus(urlsDir).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      } else Array.empty[org.apache.hadoop.fs.FileStatus]
+    val files = graft.sources.Tables.dataFiles(fs, urlsDir)
     val appended = graft.sinks.Pruning.readIndexMeta(spark, path)
       .flatMap(_.params.get("n_urls")).getOrElse(0L)
     val (nRows, nDistinct) = if (files.isEmpty) (0L, 0L) else {
-      val r = spark.read.parquet(s"$path/urls")
+      val r = graft.sources.Tables.read(spark, s"$path/urls")
         .agg(count(lit(1)), count_distinct(col("h"))).collect()(0)
       (r.getLong(0), r.getLong(1))
     }
@@ -783,7 +779,7 @@ object Urls {
     graft.sinks.Writers.acquireSwapLock(fs, lock, "compactFrontierIndex")
     var keepLock = false
     try {
-      val before = spark.read.parquet(dst.toString)
+      val before = graft.sources.Tables.read(spark, dst.toString)
       val beforeRows = before.count()
       val distinctDf = before.select(col("h")).distinct()
         .localCheckpoint(true)
@@ -859,8 +855,7 @@ object Urls {
         col("_h"))
   }
 
-  /** The frontier's hash set `h` as written, read with its known schema
-    * (no footer-inference job). A missing or empty index is an EMPTY
+  /** The frontier's hash set `h`. A missing or empty index is an EMPTY
     * frontier (the bootstrap state of a brand-new crawl), not an error
     * — the streaming ingest's first batch probes before anything has
     * been written.
@@ -869,11 +864,8 @@ object Urls {
       path: String): DataFrame = {
     val urlsDir = new org.apache.hadoop.fs.Path(s"$path/urls")
     val fs = urlsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasIndex = fs.exists(urlsDir) && fs.listStatus(urlsDir).exists { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (hasIndex) spark.read.schema("h BIGINT").parquet(urlsDir.toString)
+    if (graft.sources.Tables.hasData(fs, urlsDir))
+      graft.sources.Tables.read(spark, urlsDir.toString)
     else spark.range(0).select(col("id").as("h"))
   }
 }

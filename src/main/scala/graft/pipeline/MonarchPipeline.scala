@@ -94,7 +94,7 @@ object MonarchPipeline {
     */
   def inventoryBackfill(
       spark: SparkSession, warehousePath: String, inventoryPath: String): DataFrame = {
-    val byDay = spark.read.parquet(warehousePath)
+    val byDay = graft.sources.Tables.read(spark, warehousePath)
       .groupBy(col("date_only"))
       .agg(count(lit(1)).as("record_count"))
       .select(
@@ -104,7 +104,7 @@ object MonarchPipeline {
         current_timestamp().as("processed_at"))
     byDay.coalesce(1).write.mode("overwrite")
       .parquet(inventoryPath)
-    spark.read.parquet(inventoryPath)
+    graft.sources.Tables.read(spark, inventoryPath)
   }
 
   /** §3.2 read path: the Flask API's year/month/day equality filters
@@ -117,7 +117,7 @@ object MonarchPipeline {
       year: Option[Int] = None,
       month: Option[Int] = None,
       day: Option[Int] = None): DataFrame = {
-    val base = spark.read.parquet(warehousePath)
+    val base = graft.sources.Tables.read(spark, warehousePath)
     Seq(
       year.map(y => col("year") === lit(y)),
       month.map(m => col("month") === lit(m)),

@@ -504,7 +504,7 @@ object Relational {
         .localCheckpoint(true))
     val path = Det.scratchPath("q95", dir) + "/day0"
     daily.head.write.mode("overwrite").parquet(path)
-    val day0 = s.read.parquet(path)
+    val day0 = Tables.read(s, path)
     val estMerged = Sketches.estimateDistinct(
         Sketches.mergeSketches(day0 +: daily.tail, "o_orderpriority"),
         "o_orderpriority")
@@ -2200,8 +2200,8 @@ object Relational {
     val ev = Tables.events(s, dir).select(col("event_id"), col("value"),
       to_date(col("ts")).as("d"))
     ev.write.partitionBy("d").mode("overwrite").parquet(path)
-    val fact = s.read.parquet(path)
-    val dim = s.read.parquet(path).select(col("d")).distinct()
+    val fact = Tables.read(s, path)
+    val dim = Tables.read(s, path).select(col("d")).distinct()
       .filter(dayofmonth(col("d")) % 7 === 2)
     fact.join(broadcast(dim), Seq("d"))
       .groupBy(col("d"))

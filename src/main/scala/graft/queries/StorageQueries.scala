@@ -39,7 +39,7 @@ object StorageQueries {
     docsProjection(s, dir).repartition(64)
       .write.mode("overwrite").parquet(path)
     graft.sinks.Writers.compactParquet(s, path, targetFileBytes = 8L << 20)
-    s.read.parquet(path)
+    Tables.read(s, path)
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .orderBy("doc_id")
   }
@@ -58,7 +58,7 @@ object StorageQueries {
     val path = scratchPath("q68", dir) + "/t"
     graft.sinks.Writers.writeRangeClustered(
       docsProjection(s, dir), path, Seq("n_chars", "doc_id"), nFiles = 8)
-    s.read.parquet(path)
+    Tables.read(s, path)
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .orderBy("doc_id")
   }
@@ -85,7 +85,7 @@ object StorageQueries {
       .unionByName(docs.filter(col("doc_id") < 20)
         .select((col("doc_id") + 500000).as("doc_id"), col("lang"), col("n_chars")))
     graft.sinks.Writers.mergeIntoPartitioned(s, path, updates, "doc_id", "lang")
-    s.read.parquet(path)
+    Tables.read(s, path)
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .orderBy("doc_id")
   }
@@ -151,7 +151,7 @@ object StorageQueries {
       .filter(col("date_only") === lit(minDay) && col("event_id") % 2 === 0)
       .withColumn("value", col("value") * 2)
     Writers.writePartitionedByDay(redo, path)
-    s.read.parquet(path)
+    Tables.read(s, path)
       .select(col("event_id"),
         date_format(col("date_only"), "yyyy-MM-dd").as("day"),
         col("value"))
@@ -184,7 +184,7 @@ object StorageQueries {
     docsProjection(s, dir).repartition(16)
       .write.partitionBy("lang").mode("overwrite").parquet(path)
     Writers.compactPartitionedTable(s, path, targetFileBytes = 8L << 20)
-    s.read.parquet(path)
+    Tables.read(s, path)
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .orderBy("doc_id")
   }
@@ -208,7 +208,7 @@ object StorageQueries {
     val li = Tables.lineitem(s, dir).select(
       col("l_orderkey"), col("l_partkey"), col("l_suppkey"), col("l_quantity"))
     Writers.writeZOrdered(li, path, "l_partkey", "l_suppkey", nFiles = 8)
-    s.read.parquet(path)
+    Tables.read(s, path)
       .withColumn("_z", Writers.zValue(col("l_partkey"), col("l_suppkey")))
       .withColumn("zbucket", shiftrightunsigned(col("_z"), 16))
       .groupBy(col("zbucket"))
@@ -530,7 +530,7 @@ object StorageQueries {
     Writers.writePartitionedByDay(ev, path)
     val dropped = Writers.dropPartitionsBelow(s, path, "date_only", "2024-01-11")
     require(dropped.nonEmpty, "q111: expected partitions to expire")
-    s.read.parquet(path)
+    Tables.read(s, path)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), Det.exactSum(col("value")).as("sum_value"))
       .orderBy("event_type")
@@ -701,7 +701,7 @@ object StorageQueries {
       .select(col("l_orderkey"), to_date(col("l_shipdate")).as("l_shipdate"))
       .withColumn("zone", zone)
       .write.partitionBy("zone").mode("overwrite").parquet(path)
-    val t = s.read.parquet(path)
+    val t = Tables.read(s, path)
     val manifest = t.groupBy(col("zone"))
       .agg(min(col("l_shipdate")).as("mn"), max(col("l_shipdate")).as("mx"),
         count(lit(1)).as("n_rows"))
@@ -809,7 +809,7 @@ object StorageQueries {
     Tables.documents(s, dir)
       .select(col("doc_id"), pmod(col("doc_id"), lit(8)).as("shard"))
       .write.partitionBy("shard").mode("overwrite").parquet(path)
-    val t = s.read.parquet(path)
+    val t = Tables.read(s, path)
     val manifest = JoinOps.bloomManifest(t, "shard", "doc_id",
       numBits = 8192, numHashes = 4)
     val docs = Tables.documents(s, dir)
@@ -907,7 +907,7 @@ object StorageQueries {
     val probes = Seq(
       "range_ship_day" -> Seq(Pruning.Pred.range("ship_day", 731L, 911L)),
       "eq_orderkey" -> Seq(Pruning.Pred.eq("l_orderkey", 4999L)))
-    val allZones = s.read.parquet(s"$path/_graft_manifest/zones")
+    val allZones = Tables.read(s, s"$path/_graft_manifest/zones")
       .select(col("part")).distinct()
     probes.map { case (tag, preds) =>
       val keep = Pruning.pruneFiles(s, path, preds)
@@ -1001,7 +1001,7 @@ object StorageQueries {
       bloomCols = Seq("l_orderkey"), numBits = 8192, numHashes = 4)
     val keys = Seq(4999L, 32L, 11111L)
     val audit = Writers.deleteKeysPruned(s, path, "zone", "l_orderkey", keys)
-    val post = s.read.parquet(path)
+    val post = Tables.read(s, path)
       .groupBy(col("zone").cast("long").as("part"))
       .agg(count(lit(1)).as("n_remaining"))
     audit.join(post, Seq("part"), "left_outer")

@@ -1594,7 +1594,7 @@ object TrainingData {
       CorpusIngest.ingestBatch(b, idxPath, outPath, "doc_id", "text",
         minJaccard = 0.5): Unit
     }
-    s.read.parquet(outPath)
+    Tables.read(s, outPath)
       .select(col("doc_id"), md5(col("text")).as("content_md5"))
       .orderBy("doc_id")
   }
@@ -6785,7 +6785,7 @@ object TrainingData {
     Seq(b1, b2, b3).foreach { b =>
       FrontierIngest.ingestBatch(b, idxPath, logPath, "doc_id", "url"): Unit
     }
-    s.read.parquet(logPath)
+    Tables.read(s, logPath)
       .select(col("doc_id"), col("url"), col("canonical_url"))
       .orderBy("doc_id")
   }
@@ -7071,7 +7071,7 @@ object TrainingData {
       idxPath, logPath, "page_id", "url"): Unit
     // hop 2: links extracted from the pages hop 1 fetched — read back
     // from the fetch LOG (the loop's defining arrow)
-    val hop2Pages = s.read.parquet(logPath)
+    val hop2Pages = Tables.read(s, logPath)
       .filter(col("page_id") >= 10000000L)
       .select(col("page_id"), col("url"),
         concat(lit("<html><body><a href=\""), col("canonical_url"),
@@ -7079,7 +7079,7 @@ object TrainingData {
           .as("html"))
     FrontierIngest.ingestBatch(discover(hop2Pages, 20000000L),
       idxPath, logPath, "page_id", "url"): Unit
-    s.read.parquet(logPath)
+    Tables.read(s, logPath)
       .select(col("page_id"),
         when(col("page_id") >= 20000000L, 2)
           .when(col("page_id") >= 10000000L, 1)
@@ -7370,7 +7370,7 @@ object TrainingData {
     graft.operators.Urls.writeFrontierIndex(crawled, "url", idxPath)
     FrontierIngest.ingestBatch(batch, idxPath, logPath,
       "page_id", "url"): Unit
-    val log = s.read.parquet(logPath)
+    val log = Tables.read(s, logPath)
     val robots = delayRobotsFixture(s, dir)
     val delays = graft.operators.Urls.crawlDelays(
       robots, "host", "robots_txt", agent = "graftbot")

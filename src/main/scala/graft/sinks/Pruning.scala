@@ -2,7 +2,9 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
+
+import graft.sources.Tables
 
 /** Unified file-skipping: ONE manifest + ONE pruning entry point over
   * the two skipping structures the engine already demonstrates
@@ -62,7 +64,7 @@ object Pruning {
     require(bloomCols.forall(zoneCols.contains),
       "bloom columns must also carry zone stats (the equality pred " +
         "consults both)")
-    val t = spark.read.parquet(path)
+    val t = Tables.read(spark, path)
     val zones = zoneCols.map { c =>
       t.groupBy(col(partCol).cast(LongType).as("part"))
         .agg(min(col(c)).cast(LongType).as("min_v"),
@@ -99,15 +101,15 @@ object Pruning {
   def pruneFiles(spark: SparkSession, path: String,
       preds: Seq[Pred]): Seq[Long] = {
     require(preds.nonEmpty, "at least one predicate")
-    val zones = spark.read.parquet(s"${manifestDir(path)}/zones")
-    val meta = spark.read.parquet(s"${manifestDir(path)}/meta").collect()(0)
+    val zones = Tables.read(spark, s"${manifestDir(path)}/zones")
+    val meta = Tables.read(spark, s"${manifestDir(path)}/meta").collect()(0)
     val (numBits, numHashes) =
       (meta.getAs[Int]("num_bits"), meta.getAs[Int]("num_hashes"))
     val all = zones.select(col("part")).distinct()
     val covered = zones.select(col("col_name")).distinct()
       .collect().map(_.getString(0)).toSet
     val bloomCovered: Set[String] =
-      try spark.read.parquet(s"${manifestDir(path)}/bloom")
+      try Tables.read(spark, s"${manifestDir(path)}/bloom")
         .select(col("col_name")).distinct().collect().map(_.getString(0)).toSet
       catch { case _: org.apache.spark.sql.AnalysisException => Set.empty }
     val survivors = preds.foldLeft(all) { (acc, p) =>
@@ -123,8 +125,7 @@ object Pruning {
         }
       if (p.isEquality && bloomCovered(p.column)) {
         import spark.implicits._
-        val manifest = spark.read
-          .parquet(s"${manifestDir(path)}/bloom")
+        val manifest = Tables.read(spark, s"${manifestDir(path)}/bloom")
           .filter(col("col_name") === p.column)
           .select(col("part"), col("w"), col("mask"))
         val cand = graft.operators.JoinOps.bloomCandidates(manifest,
@@ -147,8 +148,8 @@ object Pruning {
       column: String, keys: Seq[Long]): Seq[Long] = {
     require(keys.nonEmpty, "at least one key")
     import spark.implicits._
-    val zones = spark.read.parquet(s"${manifestDir(path)}/zones")
-    val meta = spark.read.parquet(s"${manifestDir(path)}/meta").collect()(0)
+    val zones = Tables.read(spark, s"${manifestDir(path)}/zones")
+    val meta = Tables.read(spark, s"${manifestDir(path)}/meta").collect()(0)
     val (numBits, numHashes) =
       (meta.getAs[Int]("num_bits"), meta.getAs[Int]("num_hashes"))
     val kdf = keys.toDF("_k")
@@ -160,13 +161,13 @@ object Pruning {
         .join(kdf, col("min_v") <= col("_k") && col("max_v") >= col("_k"))
         .select(col("part"), col("_k"))
     val bloomCovered: Boolean =
-      try spark.read.parquet(s"${manifestDir(path)}/bloom")
+      try Tables.read(spark, s"${manifestDir(path)}/bloom")
         .filter(col("col_name") === column).head(1).nonEmpty
       catch { case _: org.apache.spark.sql.AnalysisException => false }
     val survivors =
       if (!bloomCovered) zoned
       else {
-        val manifest = spark.read.parquet(s"${manifestDir(path)}/bloom")
+        val manifest = Tables.read(spark, s"${manifestDir(path)}/bloom")
           .filter(col("col_name") === column)
           .select(col("part"), col("w"), col("mask"))
         zoned.join(
@@ -229,15 +230,9 @@ object Pruning {
       hadPrior = fs.exists(dst))
   }
 
-  /** The record's fixed layout, as [[writeIndexMeta]] writes it. */
-  private val indexMetaSchema = StructType(Seq(
-    StructField("kind", StringType), StructField("part_col", StringType),
-    StructField("param", StringType), StructField("value", LongType)))
-
   /** Read an index manifest back; None when the artifact predates the
     * convention (readers stay lenient for those, strict once present).
-    * Absence is one `exists` call, not a caught Spark read failure, and
-    * the known schema spares the read its footer-inference job: the
+    * Absence is one `exists` call, not a caught Spark read failure: the
     * stream sinks consult this on every micro-batch.
     */
   def readIndexMeta(spark: SparkSession, path: String): Option[IndexMeta] = {
@@ -245,7 +240,7 @@ object Pruning {
     val dir = new Path(s"${manifestDir(path)}/index_meta")
     if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)) None
     else {
-      val rows = spark.read.schema(indexMetaSchema).parquet(dir.toString).collect()
+      val rows = Tables.read(spark, dir.toString).collect()
       rows.headOption.map { h =>
         IndexMeta(h.getString(0), h.getString(1),
           rows.map(r => r.getString(2) -> r.getLong(3)).toMap)
@@ -295,7 +290,7 @@ object Pruning {
       Seq(p.lo.map(col(p.column) >= _), p.hi.map(col(p.column) <= _))
         .flatten.reduce(_ && _)
     }.reduce(_ && _)
-    spark.read.parquet(path)
+    Tables.read(spark, path)
       .filter(col(partCol).isin(keep: _*))
       .filter(residual)
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.schema.Occurrence
+import graft.sources.Tables
 
 /** Sinks (SURVEY.md §2.8 K1–K3, §2.7 D2).
   *
@@ -232,7 +233,7 @@ object Writers {
       if (touched.exists(_ == null)) base || col(partitionCol).isNull
       else base
     }
-    val existing = spark.read.parquet(path).filter(membership)
+    val existing = Tables.read(spark, path).filter(membership)
     val merged = existing
       .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
       .unionByName(updates)
@@ -352,7 +353,7 @@ object Writers {
       FaultInjection.point("compactParquet:locked")
       val totalBytes = fs.getContentSummary(dst).getLength
       val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val df = spark.read.parquet(path)
+      val df = Tables.read(spark, path)
       val (tmp, bak) = swapPaths(dst)
       df.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
       publishByRename(fs, dst, tmp, bak, "compactParquet",
@@ -432,10 +433,7 @@ object Writers {
       val futures = leafSeq.map { leaf =>
         scala.concurrent.Future {
           val t0 = System.nanoTime()
-          val dataFiles = fs.listStatus(leaf).filter { st =>
-            val n = st.getPath.getName
-            st.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
+          val dataFiles = Tables.dataFiles(fs, leaf)
           val bytes = dataFiles.map(_.getLen).sum
           val target = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
           val n =
@@ -516,7 +514,7 @@ object Writers {
       publishByRename(fs, dst, tmp, bak, "upsertInventory",
         hadPrior = fs.exists(dst), onUnrecovered = () => keepLock = true)
     } finally if (!keepLock) fs.delete(lock, false)
-    spark.read.parquet(inventoryPath)
+    Tables.read(spark, inventoryPath)
   }
 
   // ---------------------------------------------------------------
@@ -580,13 +578,7 @@ object Writers {
       fs.delete(staging, true)
       df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
       fs.mkdirs(dir)
-      val names = fs.listStatus(staging).toSeq
-        .map(_.getPath)
-        .filter { p =>
-          p.getName.endsWith(".parquet") && !p.getName.startsWith("_") &&
-            !p.getName.startsWith(".")
-        }
-        .sortBy(_.getName)
+      val names = Tables.dataFiles(fs, staging).toSeq.map(_.getPath)
         .zipWithIndex.map { case (src, i) =>
           val name = s"v$version-$i-${src.getName}"
           val target = new Path(dir, name)
@@ -649,13 +641,7 @@ object Writers {
       val staging = new Path(path + s".staging-v$version")
       fs.delete(staging, true)
       df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      val newNames = fs.listStatus(staging).toSeq
-        .map(_.getPath)
-        .filter { p =>
-          p.getName.endsWith(".parquet") && !p.getName.startsWith("_") &&
-            !p.getName.startsWith(".")
-        }
-        .sortBy(_.getName)
+      val newNames = Tables.dataFiles(fs, staging).toSeq.map(_.getPath)
         .zipWithIndex.map { case (src, i) =>
           val name = s"v$version-$i-${src.getName}"
           val target = new Path(dir, name)
@@ -695,7 +681,7 @@ object Writers {
       finally in.close()
     val files = names.filter(_.nonEmpty).map(n => new Path(dir, n).toString)
     require(files.nonEmpty, s"readSnapshotVersion: empty manifest v$v at $path")
-    spark.read.parquet(files: _*)
+    Tables.read(spark, files: _*)
   }
 
   /** Targeted key erasure over a hive-partitioned table — the GDPR /
@@ -744,7 +730,7 @@ object Writers {
         scala.concurrent.Future.sequence(auditF),
         scala.concurrent.duration.Duration.Inf)
       finally pool.shutdown()
-    val allParts = spark.read.parquet(s"$path/_graft_manifest/zones")
+    val allParts = Tables.read(spark, s"$path/_graft_manifest/zones")
       .select(col("part")).distinct()
       .collect().map(_.getLong(0)).sorted
     val byPart = audit.map(a => a._1 -> a).toMap
@@ -768,7 +754,7 @@ object Writers {
       var keepLock = false
       try {
         FaultInjection.point("deleteKeysPruned:locked")
-        val df = spark.read.parquet(leaf.toString)
+        val df = Tables.read(spark, leaf.toString)
         val nDel = df.filter(col(keyCol).isin(keys: _*)).count()
         if (nDel == 0L) (v, 1, 0L, 0) // Bloom false positive: untouched
         else {

@@ -15,7 +15,7 @@ object Ingest {
     jdbcUrl match {
       case Some(url) => spark.read.format("jdbc")
         .option("url", url).option("dbtable", table).load()
-      case None => spark.read.parquet(s"$parquetDir/$table.parquet")
+      case None => Tables.load(spark, parquetDir, table)
     }
 
   /** S5: column names in ordinal order — the reference queries

@@ -1,8 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Parquet loaders for the harness star schema (TESTDATA.md).
+/** Parquet loaders for the harness star schema (TESTDATA.md), and the
+  * one parquet read every engine path goes through ([[read]]).
   *
   * The reference's sources are a paginated REST scan plus PostgreSQL table
   * scans (SURVEY.md §2.1; `/root/reference/monarch_etl/gbif_client.py:56-164`,
@@ -16,14 +18,66 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * them at a partitioned table (`date_only=`/`l_shipdate`-partitioned
   * layout) and partition pruning replaces the reference's table-per-day
   * naming scheme (`monarch_etl/table_naming.py:24-43`).
+  *
+  * Read policy: a table's schema is the footer of its first data file,
+  * read on the driver. A bare `spark.read.parquet` infers the same
+  * schema with a Spark job at every query build; a schema kept by hand
+  * beside a writer drifts from what the writer wrote. [[read]] is the
+  * one place that decides a parquet schema, and it starts no job.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Data files under `dir`, sorted by path: names starting with `_` or
+    * `.` (`_SUCCESS`, `.crc`, `_graft_manifest/`, staging dirs) are
+    * skipped, and subdirectories (the `col=value/` partitions) are
+    * walked. Empty when `dir` does not exist.
+    */
+  def dataFiles(fs: FileSystem, dir: Path): Array[FileStatus] =
+    if (!fs.exists(dir)) Array.empty
+    else fs.listStatus(dir).flatMap { st =>
+      val n = st.getPath.getName
+      if (n.startsWith("_") || n.startsWith(".")) Array.empty[FileStatus]
+      else if (st.isDirectory) dataFiles(fs, st.getPath)
+      else Array(st)
+    }.sortBy(_.getPath.toString)
+
+  /** True iff `dir` holds at least one data file — a directory left
+    * empty by a crashed-then-cleaned first batch is not a readable table.
+    */
+  def hasData(fs: FileSystem, dir: Path): Boolean = dataFiles(fs, dir).nonEmpty
+
+  /** `spark.read.parquet(paths)` with the schema Spark would infer, taken
+    * from the footer of the first data file (by path, the file inference
+    * picks) on the driver, so building the read starts no Spark job.
+    * Spark's own conversion honours the row metadata Spark writers embed
+    * and the session's parquet flags (`nanosAsLong`, binary-as-string, …).
+    * A path with no data file keeps the plain read and its error.
+    */
+  def read(spark: SparkSession, paths: String*): DataFrame = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.newHadoopConf()
+    val first = paths.flatMap { p =>
+      val dir = new Path(p)
+      dataFiles(dir.getFileSystem(conf), dir)
+    }.minByOption(_.getPath.toString)
+    first.fold(spark.read.parquet(paths: _*)) { st =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, conf), SKIP_ROW_GROUPS)
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new Footer(st.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      spark.read.schema(schema).parquet(paths: _*)
+    }
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -51,11 +105,17 @@ object Tables {
     *    TimestampType; pass through.
     *
     * Every conversion is a codegen'd projection on the scan, not a UDF.
+    * The loader reads the session's `nanosAsLong` and never sets it:
+    * [[graft.GraftSession.builder]] does, and a session without it throws.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (!s.sessionState.conf.legacyParquetNanosAsLong)
+      throw new IllegalStateException(
+        "Tables.events needs spark.sql.legacy.parquet.nanosAsLong=true on the " +
+          "session (GraftSession.builder sets it): events.ts may be parquet " +
+          "TIMESTAMP(NANOS), which Spark reads only as INT64")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType =>

@@ -16,20 +16,6 @@ private[streaming] object BatchCommit {
 
   def batchPrefix(id: Long): String = s"batch$id-"
 
-  /** Data files of a parquet output dir (skips _SUCCESS/.crc hidden files). */
-  def dataFiles(fs: FileSystem, dir: Path): Array[Path] =
-    fs.listStatus(dir).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(_.getPath).sortBy(_.getName)
-
-  /** True iff `dir` exists and holds at least one data file — a
-    * directory left empty by a crashed-then-cleaned first batch must
-    * bootstrap, not be read as an (unreadable) empty parquet table.
-    */
-  def hasData(fs: FileSystem, dir: Path): Boolean =
-    fs.exists(dir) && dataFiles(fs, dir).nonEmpty
-
   /** Delete this batch's files from a live dir — the partial residue of
     * a commit that crashed between file moves.
     */
@@ -46,7 +32,7 @@ private[streaming] object BatchCommit {
     */
   def moveIn(fs: FileSystem, staging: Path, dest: Path, id: Long): Unit = {
     fs.mkdirs(dest)
-    dataFiles(fs, staging).zipWithIndex.foreach { case (src, i) =>
+    graft.sources.Tables.dataFiles(fs, staging).map(_.getPath).zipWithIndex.foreach { case (src, i) =>
       val target = new Path(dest, s"${batchPrefix(id)}$i-${src.getName}")
       if (!fs.rename(src, target))
         throw new java.io.IOException(s"rename $src -> $target failed")

@@ -47,7 +47,7 @@ import graft.operators.Dedup
   * Scale: ONE signature pass per batch. The batch's shingle sets,
   * signatures and band keys are computed once, unwidened, and serve
   * the probe, its verification and the survivors' index rows. The
-  * probe reads the index with its written schema (no footer-inference
+  * probe reads the index through `Tables.read` (no footer-inference
   * job) and aggregates only the index band rows whose key the batch
   * holds. The survivor count rides the survivors' checkpoint as an
   * observe() metric. No round-robin shuffle runs, and a batch adds one
@@ -60,7 +60,8 @@ object CorpusIngest {
 
   import org.apache.hadoop.fs.Path
 
-  import BatchCommit.{cleanBatchFiles, hasData, moveIn}
+  import BatchCommit.{cleanBatchFiles, moveIn}
+  import graft.sources.Tables.hasData
 
   /** Ingest ONE batch: dedup against the index (bootstrap: a missing
     * index means nothing ingested yet — everything survives), append

@@ -40,8 +40,8 @@ import graft.operators.Urls
   *
   * Scale: per batch, ONE plan builds the fetch set — the first
   * (id, url, canonical_url) per canonical hash, left-anti joined
-  * against the index hashes, which are read with their written schema
-  * (no footer-inference job) and never de-duplicated as a whole. No
+  * against the index hashes, which are read through `Tables.read` (no
+  * footer-inference job) and never de-duplicated as a whole. No
   * re-join with the batch; the fetched count rides the checkpoint as
   * an observe() metric; then two batch-sized writes, the index one
   * hash per fetched row. The index grows one 8-byte hash per fetched

@@ -30,15 +30,40 @@ object ScaleData {
 
   private val Offset = 10000000L
 
+  val usage = "usage: graft.tools.ScaleData <srcSfDir> <dstDir> <copies>"
+
+  // The per-copy rotation ring of `documents.text`. It must be LARGER
+  // than the copy count or rotations repeat (copy k ≡ k+ring produced
+  // IDENTICAL text — the round-9 sf3 sweep caught q112 measuring 4
+  // pairs of duplicated corpora instead of a 30× corpus). Ring = a-z0-9
+  // (36) + Latin-1 letters À..ÿ minus ×/÷ (62) + Latin Extended-A/B
+  // Ā..ǿ (256) = 354 chars, supporting the round-14 ask's 300-copy
+  // (sf30) probe.
+  private val alpha = "abcdefghijklmnopqrstuvwxyz0123456789" +
+    (0xC0 to 0xFF).filter(c => c != 0xD7 && c != 0xF7)
+      .map(_.toChar).mkString +
+    (0x100 until 0x200).map(_.toChar).mkString
+
+  /** (src, dst, copies); `copies` is a positive integer the rotation
+    * ring can keep disjoint.
+    */
+  def parse(args: Seq[String]): Either[String, (String, String, Int)] = args match {
+    case Seq(src, dst, copies) => copies.toIntOption.filter(_ > 0) match {
+      case Some(n) if n <= alpha.length => Right((src, dst, n))
+      case Some(n) => Left(s"copies: the text rotation ring supports at most ${alpha.length} disjoint copies, got $n")
+      case None => Left(s"copies must be a positive integer: $copies")
+    }
+    case _ => Left(s"unexpected arguments: ${args.mkString(" ")}")
+  }
+
   private def replicate(base: DataFrame, copies: Int)(shift: (DataFrame, Int) => DataFrame): DataFrame =
     (0 until copies).map(k => shift(base, k)).reduce(_ unionByName _)
 
   def main(args: Array[String]): Unit = {
-    val Array(src, dst, copiesStr) = args
-    val copies = copiesStr.toInt
+    val (src, dst, copies) = graft.Bench.orUsage(parse(args.toSeq), usage)
     val spark = graft.GraftSession.local(graft.GraftSession.cpus)
 
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String) = graft.sources.Tables.load(spark, src, t)
     def write(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$dst/$t.parquet")
 
@@ -59,23 +84,11 @@ object ScaleData {
       shiftCols(_, _, "event_id", "user_id")), "events")
 
     // documents: shift ids, rotate the alphabet per copy (length- and
-    // whitespace-preserving, shingle-vocabulary-disjoint). The ring
-    // must be LARGER than the copy count or rotations repeat (copy
-    // k ≡ k+ring produced IDENTICAL text — the round-9 sf3 sweep
-    // caught q112 measuring 4 pairs of duplicated corpora instead of
-    // a 30× corpus). Ring = a-z0-9 (36) + Latin-1 letters À..ÿ minus
-    // ×/÷ (62) + Latin Extended-A/B Ā..ǿ (256) = 354 chars,
-    // supporting the round-14 ask's 300-copy (sf30) probe. Source
-    // text is letters-only, so distinct rotations produce distinct
-    // token images; letters mapping into digits/accented letters is
-    // fine for bench-only fixtures (char lengths, whitespace, and
-    // token boundaries preserved — Spark string ops are char-based).
-    val alpha = "abcdefghijklmnopqrstuvwxyz0123456789" +
-      (0xC0 to 0xFF).filter(c => c != 0xD7 && c != 0xF7)
-        .map(_.toChar).mkString +
-      (0x100 until 0x200).map(_.toChar).mkString
-    require(copies <= alpha.length,
-      s"text rotation ring supports at most ${alpha.length} disjoint copies, got $copies")
+    // whitespace-preserving, shingle-vocabulary-disjoint). Source text
+    // is letters-only, so distinct rotations produce distinct token
+    // images; letters mapping into digits/accented letters is fine for
+    // bench-only fixtures (char lengths, whitespace, and token
+    // boundaries preserved — Spark string ops are char-based).
     write(replicate(read("documents"), copies) { (d, k) =>
       val rot = (k % alpha.length)
       val to = alpha.drop(rot) + alpha.take(rot)
@@ -96,7 +109,7 @@ object ScaleData {
     }, "embeddings")
 
     graft.sources.Tables.names.foreach { t =>
-      println(s"[scale] $t rows=" + spark.read.parquet(s"$dst/$t.parquet").count())
+      println(s"[scale] $t rows=" + graft.sources.Tables.load(spark, dst, t).count())
     }
     spark.stop()
   }

@@ -46,6 +46,15 @@ class BenchCliSpec extends SparkSpec {
     assert(Verify.parse(Seq("s", "o")).map(_._3.size) == Right(SparkEntry.queries.size))
   }
 
+  test("ScaleData: the wrong argument count or a bad copies value is a usage error") {
+    import graft.tools.ScaleData
+    assert(ScaleData.parse(Seq("src", "dst", "10")) == Right(("src", "dst", 10)))
+    Seq(Nil, Seq("src", "dst"), Seq("src", "dst", "10", "x"))
+      .foreach(a => assert(ScaleData.parse(a).isLeft, a))
+    Seq("0", "-3", "ten", "1.5", "", "100000")
+      .foreach(c => assert(ScaleData.parse(Seq("src", "dst", c)).isLeft, c))
+  }
+
   test("subset prints one JSON line of per-query seconds") {
     val cmd = Bench.parse(Seq("subset", sfDir, "q01_,q02_"), sfDir).toOption.get
     val Seq(line) = Bench.execute(new Bench.Runner(spark, sfDir), cmd)
