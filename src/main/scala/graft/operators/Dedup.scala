@@ -998,8 +998,9 @@ object Dedup {
     * (NULL cosine) never match: they all survive.
     *
     * Scale shape: one k-means fit + one assignment over the corpus
-    * (both inherit the two-regime zero-amplification plans of
-    * [[graft.operators.Similarity]]), then a join of the corpus against
+    * (both through [[graft.operators.Similarity.rankCentroids]]: the
+    * centroids ride one broadcast row, the corpus never shuffles for
+    * them), then a join of the corpus against
     * nlist × K dominator rows — broadcast when that side fits under
     * ~64 MB of vectors, otherwise a keyed exchange on centroid_id (the
     * corpus crosses once; per-key dominator fanout is ≤ K by
@@ -1012,18 +1013,15 @@ object Dedup {
       corpus: DataFrame, idCol: String, vecCol: String,
       minCosine: Double = 0.95,
       nlist: Int = 8, iters: Int = 1,
-      maxDominators: Int = 48,
-      literalCellBudget: Int = Similarity.maxLiteralCells): DataFrame = {
+      maxDominators: Int = 48): DataFrame = {
     require(maxDominators > 0, s"maxDominators must be positive: $maxDominators")
     val vecs = graft.sources.Tables.widen(corpus)
       .select(col(idCol), col(vecCol)).persist()
     try {
-      val cents = Similarity.fitCentroids(
-        vecs, idCol, vecCol, nlist, iters, literalCellBudget)
+      val cents = Similarity.fitCentroids(vecs, idCol, vecCol, nlist, iters)
       // fit + assignment run once; the pair join reads the result from
       // both sides, so pin it (small: id, centroid, vector per row)
-      val assigned = Similarity.assignToCentroid(
-          vecs, cents, idCol, vecCol, "_id", literalCellBudget)
+      val assigned = Similarity.assignToCentroid(vecs, cents, idCol, vecCol, "_id")
         .localCheckpoint(true)
       val dominators = graft.plans.TopKPerKey.topKPerKey(
           assigned, keys = Seq(col("centroid_id")),

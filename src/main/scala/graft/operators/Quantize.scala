@@ -96,8 +96,8 @@ object Quantize {
   // billion-vector ANN (IVF-PQ). Fit = the deterministic Lloyd
   // k-means this module already ships ([[Similarity.fitCentroids]]),
   // run per subspace; encode = ONE zero-shuffle projection (each
-  // subspace's nearest-centroid argmin is a literal-folded
-  // expression, the IVF literal regime); search = asymmetric distance
+  // subspace's nearest-centroid argmin is the IVF centroid scorer,
+  // [[Similarity.rankCentroids]]); search = asymmetric distance
   // computation (ADC): the query precomputes its inner product
   // against every codebook entry (m × nlist doubles), and a
   // candidate's score is m table lookups + (m−1) additions — no
@@ -119,28 +119,21 @@ object Quantize {
     }
 
   /** PQ encode: append `code_j` (the assigned codebook id per
-    * subspace) in ONE projection over one scan — the codebooks are
-    * driver-bounded literals, so the plan is scan → expression →
-    * output with ZERO exchanges (the shape that encodes 10⁹ vectors
-    * embarrassingly parallel). Tie-break matches the IVF assignment:
-    * (cosine desc, centroid id asc).
+    * subspace) in ONE pass over one scan — each codebook rides one
+    * broadcast row ([[Similarity.rankCentroids]]), so the corpus side
+    * is scan → projection → output with ZERO shuffles (the shape that
+    * encodes 10⁹ vectors embarrassingly parallel). Float and double
+    * vectors alike. Tie-break matches the IVF assignment: (cosine
+    * desc, centroid id asc).
     */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
       codebooks: Seq[DataFrame], subDim: Int): DataFrame = {
     var out = corpus.select(col(idCol) +: codebooks.indices.map(j =>
       slice(col(vecCol), j * subDim + 1, subDim).as(s"_sub$j")): _*)
     codebooks.zipWithIndex.foreach { case (cb, j) =>
-      val cents = cb.select(col("centroid_id"), col("_centroid")).collect()
-      val scored = cents.map { r =>
-        val sim = graft.functions.VectorFunctions.cosine(
-          col(s"_sub$j"), typedlit(r.getSeq[Float](1)))
-        struct(
-          when(sim.isNull, lit(Double.MaxValue)).otherwise(-sim).as("negsim"),
-          lit(r.get(0)).as("cid"))
-      }
-      out = out.withColumn(s"code_$j",
-        slice(array_sort(array(scored.toIndexedSeq: _*)), 1, 1)
-          .getItem(0).getField("cid"))
+      out = Similarity.rankCentroids(out, cb, s"_sub$j", nprobe = 1, s"_near$j")
+        .withColumn(s"code_$j", col(s"_near$j").getItem(0).getField("cid"))
+        .drop(s"_near$j")
     }
     out.drop(codebooks.indices.map(j => s"_sub$j"): _*)
   }
@@ -156,23 +149,19 @@ object Quantize {
   def pqTopK(codes: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, codebooks: Seq[DataFrame], subDim: Int,
       k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol))
     // per-subspace query IP table: (query_id, code_j, _ip_j) —
-    // queries × nlist rows, built from literal codebook entries in
-    // one projection + explode
-    def qTable(cb: DataFrame, j: Int): DataFrame = {
-      val cents = cb.select(col("centroid_id"), col("_centroid")).collect()
-      val entries = cents.map { r =>
-        struct(lit(r.get(0)).as("cid"),
-          graft.functions.VectorFunctions.dot(
-            slice(col(vecCol), j * subDim + 1, subDim),
-            typedlit(r.getSeq[Float](1))).as("ip"))
-      }
-      q.select(col("query_id"),
-          explode(array(entries.toIndexedSeq: _*)).as("_e"))
+    // queries × nlist rows, the query subvector dotted with every
+    // entry of the codebook's broadcast row, then exploded
+    def qTable(cb: DataFrame, j: Int): DataFrame =
+      Similarity.withCentroidRow(
+          queries.select(col(idCol).as("query_id"),
+            slice(col(vecCol), j * subDim + 1, subDim).as("_qs")), cb, "_cb")
+        .select(col("query_id"), explode(transform(col("_cb"), c =>
+          struct(c.getField("cid").as("cid"),
+            graft.functions.VectorFunctions.dot(col("_qs"), c.getField("v")).as("ip"))))
+          .as("_e"))
         .select(col("query_id"), col("_e.cid").as(s"code_$j"),
           col("_e.ip").as(s"_ip$j"))
-    }
     // candidates pick up (query_id, ip) through their subspace-0 code,
     // then each further subspace joins on (query_id, code_j): the
     // scored stream carries codes and ids only, never embeddings

@@ -93,9 +93,9 @@ object Selection {
     * the same sequential double fold as the assignment itself — both
     * replayable by any engine, so the pruned set is deterministic.
     *
-    * Scale: the assignment is the IVF regime pair (literal plan or
-    * map-side argmin aggregate — never an nlist-amplified exchange);
-    * the per-cluster rank is a window partitioned by centroid_id,
+    * Scale: the assignment is the IVF centroid scorer
+    * ([[Similarity.rankCentroids]] — one broadcast centroid row, never
+    * an nlist-amplified exchange); the per-cluster rank is a window partitioned by centroid_id,
     * which is bounded work per task PROVIDED nlist scales with the
     * corpus (the standing IVF rule: nlist ≈ √N keeps clusters
     * ~10⁶-row — same contract as the index build; a fixed nlist at

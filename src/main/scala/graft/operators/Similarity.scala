@@ -16,8 +16,9 @@ import graft.plans.Checkpoints
   *  2. [[lshTopK]] — random-hyperplane bucket candidates + exact
   *     re-rank: the 10⁹-vector scale path (shuffle on signature only).
   *  3. [[ivfTopK]] — inverted-file: coarse centroids, probe the nearest
-  *     `nprobe` lists; centroid assignment is a zero-shuffle projection
-  *     against collected centroid literals.
+  *     `nprobe` lists; every centroid decision goes through one scorer
+  *     ([[rankCentroids]]) that ranks a broadcast centroid row per input
+  *     row — zero shuffle on the corpus side, no driver-side collect.
   */
 object Similarity {
 
@@ -117,18 +118,16 @@ object Similarity {
     * lists per query.
     *
     * Scale: centroid assignment is a zero-shuffle per-row projection
-    * ([[assignNearest]]); the persisted form (partitioned by
+    * ([[rankCentroids]]); the persisted form (partitioned by
     * `centroid_id`) means a query touches nprobe/nlist of the corpus.
     */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
-      nlist: Int = 16, nprobe: Int = 4, refineIters: Int = 0,
-      literalCellBudget: Int = maxLiteralCells): DataFrame = {
+      nlist: Int = 16, nprobe: Int = 4, refineIters: Int = 0): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(desc("cosine"), asc("neighbor_id"))
-    ivfCandidates(corpus, queries, idCol, vecCol, nlist, nprobe,
-      refineIters, literalCellBudget)
+    ivfCandidates(corpus, queries, idCol, vecCol, nlist, nprobe, refineIters)
       .withColumn("rank", row_number().over(w).cast(IntegerType))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
@@ -153,8 +152,7 @@ object Similarity {
   def ivfCandidates(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String,
-      nlist: Int = 16, nprobe: Int = 4, refineIters: Int = 0,
-      literalCellBudget: Int = maxLiteralCells): DataFrame = {
+      nlist: Int = 16, nprobe: Int = 4, refineIters: Int = 0): DataFrame = {
     // deterministic centroid sample via TakeOrderedAndProject
     // (per-partition top-nlist heaps + driver merge of nlist·P rows).
     // A row_number() over a global Window.orderBy here would funnel
@@ -163,13 +161,13 @@ object Similarity {
     // ([[fitCentroids]]) — better-balanced lists, same contract.
     val centroids =
       if (refineIters > 0)
-        fitCentroids(corpus, idCol, vecCol, nlist, refineIters, literalCellBudget)
+        fitCentroids(corpus, idCol, vecCol, nlist, refineIters)
       else centroidSample(corpus, idCol, vecCol, nlist)
 
     // widen: the list-probe join streams the assigned corpus side —
     // its scan partitioning is the candidate-scoring parallelism
     val assigned = assignToCentroid(graft.sources.Tables.widen(corpus), centroids, idCol, vecCol,
-      "neighbor_id", literalCellBudget)
+      "neighbor_id")
     val probed = assignToCentroids(queries, centroids, idCol, vecCol, "query_id", nprobe)
 
     assigned.join(probed, Seq("centroid_id"))
@@ -188,15 +186,13 @@ object Similarity {
   def writeIvfIndex(
       corpus: DataFrame, path: String,
       idCol: String, vecCol: String, nlist: Int = 16,
-      refineIters: Int = 0,
-      literalCellBudget: Int = maxLiteralCells): Unit = {
+      refineIters: Int = 0): Unit = {
     val centroids =
       if (refineIters > 0)
-        fitCentroids(corpus, idCol, vecCol, nlist, refineIters, literalCellBudget)
+        fitCentroids(corpus, idCol, vecCol, nlist, refineIters)
       else centroidSample(corpus, idCol, vecCol, nlist)
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    assignToCentroid(corpus, centroids, idCol, vecCol, "neighbor_id",
-      literalCellBudget)
+    assignToCentroid(corpus, centroids, idCol, vecCol, "neighbor_id")
       .select(col("neighbor_id"), col("_cv").as("embedding"), col("centroid_id"))
       .write.mode("overwrite").partitionBy("centroid_id")
       .parquet(s"$path/index")
@@ -214,10 +210,10 @@ object Similarity {
     * recomputed — recall characteristics drift with the corpus, but
     * re-clustering is an explicit offline rebuild decision, not an
     * ingest side effect), the new batch is assigned to those pinned
-    * centroids with the same literal/aggregate regime auto-switch as
-    * the initial build, and the assignments land as NEW files inside
-    * the existing `centroid_id=` partition directories (parquet
-    * append — existing files are never rewritten). Readers
+    * centroids with the same scorer as the initial build, and the
+    * assignments land as NEW files inside the existing `centroid_id=`
+    * partition directories (parquet append — existing files are never
+    * rewritten). Readers
     * ([[ivfTopKFromIndex]]) are transparent: partition pruning sees
     * one directory per probed centroid regardless of how many append
     * batches produced it. Append cost is one assignment projection
@@ -226,11 +222,9 @@ object Similarity {
     */
   def appendToIvfIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String,
-      literalCellBudget: Int = maxLiteralCells): Unit = {
+      newVectors: DataFrame, idCol: String, vecCol: String): Unit = {
     val centroids = graft.sources.Tables.read(spark, s"$path/centroids")
-    assignToCentroid(newVectors, centroids, idCol, vecCol, "neighbor_id",
-      literalCellBudget)
+    assignToCentroid(newVectors, centroids, idCol, vecCol, "neighbor_id")
       .select(col("neighbor_id"), col("_cv").as("embedding"), col("centroid_id"))
       .write.mode("append").partitionBy("centroid_id")
       .parquet(s"$path/index")
@@ -298,10 +292,9 @@ object Similarity {
   /** Deterministic distributed k-means (Lloyd) refinement for IVF
     * centroids — the offline fit [[ivfTopK]]'s scaladoc defers to.
     * Seeds from [[centroidSample]], then per iteration: assign every
-    * corpus vector to its nearest centroid (the same two-regime
-    * assignment the index build uses — zero-shuffle literal projection
-    * or min_by aggregation, never a window) and recompute each
-    * centroid as its list's per-dimension mean. Returns
+    * corpus vector to its nearest centroid (the same scorer the index
+    * build uses — a broadcast centroid row, never a window) and
+    * recompute each centroid as its list's per-dimension mean. Returns
     * (centroid_id, _centroid) with the seed ids as stable labels,
     * ready to feed an index build; empty lists keep their previous
     * centroid (standard Lloyd handling).
@@ -319,13 +312,12 @@ object Similarity {
     * per-dimension aggregation — `posexplode` amplifies rows ×dim but
     * hash partial aggregation collapses them to ≤ nlist × dim rows per
     * task before the exchange, the standard distributed-k-means
-    * profile. The centroid means themselves (nlist × dim cells) are
-    * driver-bounded by the same budget the assignment uses.
+    * profile. The centroid means themselves (nlist × dim cells) reach
+    * the assignment as the scorer's one broadcast row.
     */
   def fitCentroids(
       corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int = 16, iters: Int = 2,
-      literalCellBudget: Int = maxLiteralCells): DataFrame = {
+      nlist: Int = 16, iters: Int = 2): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val elemType = corpus.schema(vecCol).dataType match {
       case ArrayType(t, _) => t
@@ -334,9 +326,7 @@ object Similarity {
     var centroids = centroidSample(corpus, idCol, vecCol, nlist)
       .localCheckpoint(true)
     for (_ <- 0 until iters) {
-      val assigned =
-        assignToCentroid(corpus, centroids, idCol, vecCol, "_kid",
-          literalCellBudget)
+      val assigned = assignToCentroid(corpus, centroids, idCol, vecCol, "_kid")
       // per-(centroid, dimension) exact-decimal mean: associative sum,
       // one final double division — order-independent, bit-stable
       val dimMeans = assigned
@@ -362,10 +352,8 @@ object Similarity {
 
   private[graft] def assignToCentroid(
       df: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String, outId: String,
-      literalCellBudget: Int = maxLiteralCells): DataFrame =
-    assignNearest(df, centroids, idCol, vecCol, outId, "_cv", nprobe = 1,
-      literalCellBudget)
+      idCol: String, vecCol: String, outId: String): DataFrame =
+    assignNearest(df, centroids, idCol, vecCol, outId, "_cv", nprobe = 1)
 
   private[graft] def assignToCentroids(
       df: DataFrame, centroids: DataFrame,
@@ -373,94 +361,73 @@ object Similarity {
     assignNearest(df, centroids, idCol, vecCol, outId, "_qv", nprobe)
 
   /** Nearest-centroid assignment (shared by the index build and the
-    * query probe), two regimes:
-    *
-    * **Literal regime** (nlist × dim ≤ [[maxLiteralCells]], the normal
-    * IVF shape at test and mid scale): the ≤`nlist` centroids are
-    * collected — they are `orderBy.limit(nlist)` driver-sized by
-    * construction — and each row's `nprobe` nearest centroids come out
-    * of ONE native projection: score every centroid literal, sort the
-    * scored array, keep the first `nprobe`, explode. ZERO shuffle: the
-    * build plan is scan → projection → write (PlanShapeSpec asserts no
-    * Exchange at all).
-    *
-    * **Aggregate regime** (huge indexes — a 10⁹-vector corpus wants
-    * nlist ~3·10⁴, and 3·10⁴ × dim literals would blow plan/codegen
-    * limits): broadcast-join the centroid table, score per (row,
-    * centroid) MAP-SIDE, and reduce to the argmin with a `min_by`
-    * aggregation — partial aggregation collapses the nlist-amplified
-    * scored rows inside each task, so the exchange carries the corpus
-    * exactly ONCE (payload included, un-amplified). Never the window
-    * formulation this module dropped in r6, whose exchange was
-    * nlist-amplified. Only the nprobe = 1 (corpus-assignment) case can
-    * take this path; the probe side is query-sized and always fits the
-    * literal regime.
-    *
-    * Tie-break parity across both regimes and with the window they
-    * replace (`row_number over (desc(_sim), asc(centroid_id))`): the
-    * ordering key is the struct (negated cosine, centroid_id) —
-    * lexicographic struct ordering gives cosine desc then id asc —
-    * with NULL cosine (zero vectors) mapped to Double.MaxValue,
-    * matching desc-nulls-last. NaN/Inf vector ELEMENTS are
-    * unsupported: a NaN cosine sorts LAST here (both regimes agree),
-    * whereas the pre-r6 window's `desc(_sim)` sorted NaN first and
-    * would have crowned the NaN centroid nearest — behavior not worth
-    * reproducing. Sanitize embeddings upstream; the parity contract
-    * covers finite and zero/NULL vectors only.
-    *
-    * `literalCellBudget` (r7) injects the regime threshold so the
-    * aggregate path — the one that actually runs at 10⁹-vector scale —
-    * is exercisable on the cross-engine oracle gate (q65b forces it
-    * with budget 1) and in plan-shape CI, not just in regime-parity
-    * specs. Production callers leave the default.
+    * query probe): each row's `nprobe` nearest centroids, one output
+    * row per (row, centroid) as (outId, centroid_id, vecOut).
     */
   private def assignNearest(
       df: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, outId: String, vecOut: String,
-      nprobe: Int, literalCellBudget: Int = maxLiteralCells): DataFrame = {
-    val nlist = centroids.limit(maxLiteralCells + 1).count()
-    require(nlist > 0, "assignNearest: empty centroid set")
-    val dim = centroids.select(size(col("_centroid"))).head().getInt(0)
-    if (nlist * dim <= literalCellBudget)
-      assignNearestLiteral(df, centroids, idCol, vecCol, outId, vecOut, nprobe)
-    else {
-      require(nprobe == 1,
-        s"assignNearest: nlist=$nlist x dim=$dim exceeds the literal-plan budget " +
-          s"($maxLiteralCells cells) and the aggregate path supports nprobe=1 only " +
-          "(corpus assignment); probe query batches with <= budget-sized centroid sets")
-      assignNearestAgg(df, centroids, idCol, vecCol, outId, vecOut)
-    }
-  }
-
-  /** Plan-size budget for embedding centroids as literals: ~256k cells
-    * ≈ 2 MB of doubles in the plan — well under codegen/proto limits,
-    * far above any test fixture.
-    */
-  private[graft] val maxLiteralCells = 1 << 18
-
-  private[graft] def assignNearestLiteral(
-      df: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String, outId: String, vecOut: String,
-      nprobe: Int): DataFrame = {
-    // bounded collect: ≤ nlist rows, each one centroid id + one vector
-    val vecType = centroids.schema("_centroid").dataType
-    val cents = centroids.select(col("centroid_id"), col("_centroid")).collect()
-    val scored = cents.map { r =>
-      val cvec: Column = vecType match {
-        case ArrayType(FloatType, _)  => typedlit(r.getSeq[Float](1))
-        case ArrayType(DoubleType, _) => typedlit(r.getSeq[Double](1))
-        case t => throw new IllegalArgumentException(
-          s"assignNearest: unsupported vector type $t")
-      }
-      val sim = cosine(col(vecOut), cvec)
-      struct(
-        when(sim.isNull, lit(Double.MaxValue)).otherwise(-sim).as("negsim"),
-        lit(r.get(0)).as("cid")) // lit preserves the id column's type
-    }
-    val best = slice(array_sort(array(scored.toIndexedSeq: _*)), 1, nprobe)
-    df.select(col(idCol).as(outId), col(vecCol).as(vecOut))
-      .withColumn("_best", explode(best))
+      nprobe: Int): DataFrame =
+    rankCentroids(df.select(col(idCol).as(outId), col(vecCol).as(vecOut)),
+        centroids, vecOut, nprobe, "_best")
+      // explode_outer: the array is never empty, and a plain explode
+      // makes the optimizer infer a `size(_best) > 0` filter that it
+      // pushes into the join condition — scoring every row twice
+      .select(col(outId), explode_outer(col("_best")).as("_best"), col(vecOut))
       .select(col(outId), col("_best.cid").as("centroid_id"), col(vecOut))
+
+  /** Attach a centroid frame `(centroid_id, _centroid)` to every row of
+    * `df` as ONE broadcast row: column `as` holds
+    * `collect_list((cid, v, n))` — each centroid's id, vector and L2
+    * norm, the norm computed once per centroid. The centroid frame
+    * stays a relation inside the plan (no driver collect, no job while
+    * the query is built); the corpus side streams through a
+    * broadcast-nested-loop join with no shuffle of its own.
+    */
+  private[graft] def withCentroidRow(
+      df: DataFrame, centroids: DataFrame, as: String): DataFrame =
+    df.crossJoin(broadcast(centroids.agg(collect_list(struct(
+      col("centroid_id").as("cid"), col("_centroid").as("v"),
+      normL2(col("_centroid")).as("n"))).as(as))))
+
+  /** The one centroid scorer behind IVF assignment and probing, the
+    * k-means steps and PQ encoding: append column `out` to `df` holding
+    * the `nprobe` centroids nearest to vector column `vec`, nearest
+    * first, as an array of (negsim, cid) structs.
+    *
+    * Cosine is `dot(v, c) / (normL2(v) * normL2(c))` — NULL when the
+    * denominator is 0 — with both norms computed once (the row's in a
+    * projection below the join, the centroid's in [[withCentroidRow]])
+    * and the operands in [[graft.functions.VectorFunctions.cosine]]'s
+    * order, so every score is bit-identical to it.
+    *
+    * Ties: the sort key is the struct (negated cosine, centroid id) —
+    * lexicographic struct order gives cosine desc then id asc, the
+    * `row_number over (desc(sim), asc(centroid_id))` contract — with a
+    * NULL cosine (zero vector) mapped to Double.MaxValue, i.e.
+    * desc-nulls-last. NaN/Inf vector ELEMENTS are unsupported (a NaN
+    * cosine sorts last); sanitize embeddings upstream.
+    *
+    * An empty centroid set fails the query when it executes
+    * (`raise_error`), never silently assigning nothing.
+    */
+  private[graft] def rankCentroids(
+      df: DataFrame, centroids: DataFrame, vec: String, nprobe: Int,
+      out: String): DataFrame = {
+    val scored = transform(col("_cents"), c => {
+      val denom = col("_vn") * c.getField("n")
+      val sim = when(denom === 0.0, lit(null).cast(DoubleType))
+        .otherwise(dot(col(vec), c.getField("v")) / denom)
+      // -coalesce(sim, -MaxValue), not when(sim.isNull, …): the lambda
+      // is evaluated without common-subexpression elimination, so a
+      // second reference to `sim` would run the dot product twice
+      struct((-coalesce(sim, lit(-Double.MaxValue))).as("negsim"),
+        c.getField("cid").as("cid"))
+    })
+    withCentroidRow(df.withColumn("_vn", normL2(col(vec))), centroids, "_cents")
+      .withColumn(out, when(size(col("_cents")) > 0, slice(array_sort(scored), 1, nprobe))
+        .otherwise(raise_error(lit("rankCentroids: empty centroid set"))))
+      .drop("_vn", "_cents")
   }
 
   /** Exact cosine top-k (float vectors, plain sequential double
@@ -570,24 +537,6 @@ object Similarity {
       .withColumn("rank", row_number().over(wFull).cast(IntegerType))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("dot"), col("rank"))
-  }
-
-  private[graft] def assignNearestAgg(
-      df: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String, outId: String, vecOut: String): DataFrame = {
-    val sim = cosine(col(vecOut), col("_centroid"))
-    df.select(col(idCol).as(outId), col(vecCol).as(vecOut))
-      .join(broadcast(centroids))
-      .select(col(outId), col(vecOut), col("centroid_id"),
-        when(sim.isNull, lit(Double.MaxValue)).otherwise(-sim).as("_negsim"))
-      .groupBy(col(outId))
-      .agg(
-        min_by(col("centroid_id"), struct(col("_negsim"), col("centroid_id")))
-          .as("centroid_id"),
-        // every row in the group carries the same vector (it rode the
-        // broadcast expansion), so first() is deterministic here
-        first(col(vecOut)).as(vecOut))
-      .select(col(outId), col("centroid_id"), col(vecOut))
   }
 
   /** Maximal-marginal-relevance diversified top-k: greedy selection

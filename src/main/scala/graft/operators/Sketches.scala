@@ -273,15 +273,18 @@ object Sketches {
     * mix (a handful of pathological documents must not own the scale).
     *
     * Thresholds come from [[histogramSketch]] + [[histogramQuantiles]]
-    * (one parallel aggregate; only two doubles reach the driver —
-    * never an `approx_percentile` per-executor buffer, never a global
-    * sort), with the q108 bin-lower-edge estimator contract: rows
-    * within one bin width of a true quantile may clamp or not — the
-    * a-priori documented error, identical in every engine. The clamp
-    * itself is one codegen'd `least/greatest` projection on the
-    * original scan; NULL values pass through NULL and never clamp.
-    * Returns the input plus `<valueCol>_w` (clamped) and `_clamped`
-    * (-1 low / 0 untouched / 1 high).
+    * (one parallel aggregate folded to a one-row (low, high) frame that
+    * is broadcast onto the scan — no driver collect, no job while the
+    * query is built; never an `approx_percentile` per-executor buffer,
+    * never a global sort), with the q108 bin-lower-edge estimator
+    * contract: rows within one bin width of a true quantile may clamp
+    * or not — the a-priori documented error, identical in every
+    * engine. The clamp itself is one codegen'd `least/greatest`
+    * projection on the original scan; NULL values pass through NULL and
+    * never clamp, and empty or all-NULL input yields NULL thresholds,
+    * which clamp nothing (`least`/`greatest` skip NULLs). Returns the
+    * input plus `<valueCol>_w` (clamped) and `_clamped` (-1 low /
+    * 0 untouched / 1 high).
     */
   def winsorize(df: DataFrame, valueCol: String, lo: Double, hi: Double,
       bins: Int, pLow: Double, pHigh: Double): DataFrame = {
@@ -289,19 +292,17 @@ object Sketches {
       s"bad winsor percentiles ($pLow, $pHigh)")
     val sk = histogramSketch(df, valueCol, lo, hi, bins)
     val cuts = histogramQuantiles(sk, Seq(pLow, pHigh), lo, hi, bins)
-      .select(col("q"), col("est")).collect()
-      .map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-    if (cuts.isEmpty) // empty/all-NULL input: nothing to clamp against
-      return df.withColumn(s"${valueCol}_w", col(valueCol).cast("double"))
-        .withColumn("_clamped", lit(0))
-    val (tLow, tHigh) = (cuts(pLow), cuts(pHigh))
-    val v = col(valueCol).cast("double")
-    df.withColumn(s"${valueCol}_w",
+      .agg(max(when(col("q") === pLow, col("est"))).as("_tLow"),
+        max(when(col("q") === pHigh, col("est"))).as("_tHigh"))
+    val (v, tLow, tHigh) = (col(valueCol).cast("double"), col("_tLow"), col("_tHigh"))
+    df.crossJoin(broadcast(cuts))
+      .withColumn(s"${valueCol}_w",
         when(v.isNull, lit(null).cast("double"))
-          .otherwise(least(greatest(v, lit(tLow)), lit(tHigh))))
+          .otherwise(least(greatest(v, tLow), tHigh)))
       .withColumn("_clamped",
         when(v.isNull, lit(0))
           .when(v < tLow, lit(-1)).when(v > tHigh, lit(1)).otherwise(lit(0)))
+      .drop("_tLow", "_tHigh")
   }
 
   // ---- k-minimum-values (KMV) set sketches -----------------------

@@ -144,7 +144,9 @@ object GeoQueries {
     */
   def q118NearestStation(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val stations = s.range(25).select(
+    // a local relation, not s.range: the collect then runs on the
+    // driver without a Spark job
+    val stations = (0 until 25).toDF("id").select(
       col("id").cast("int").as("sid"),
       Geo.derivedCoord(col("id"), W, "sx").as("sx"),
       Geo.derivedCoord(col("id"), W, "sy").as("sy"))
@@ -242,7 +244,7 @@ object GeoQueries {
 
   private def fenceSet(s: SparkSession): Array[(Int, Long, Long, Long, Long)] = {
     import s.implicits._
-    s.range(nFences).select(
+    (0 until nFences).toDF("id").select(
       col("id").cast("int").as("fid"),
       Geo.derivedCoord(col("id"), W, "fx").as("fx"),
       Geo.derivedCoord(col("id"), W, "fy").as("fy"))

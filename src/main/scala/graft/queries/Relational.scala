@@ -1111,19 +1111,17 @@ object Relational {
     // regenerated fixtures at the same path (ScaleData reruns) would
     // otherwise keep serving the stale bucketed layout while the oracle
     // recomputes from the new parquet. Fingerprint = the Hadoop FS
-    // part-file listing (name:size:mtime per file) — java.io.File
+    // data-file listing (name:size:mtime per file; `.crc` sidecars and
+    // `_` markers excluded, as every table read does) — java.io.File
     // metadata on the top-level DIRECTORY is filesystem-dependent
     // (directory length is meaningless, mtime is coarse) and reads a
     // constant for non-local paths
     val hconf = s.sparkContext.hadoopConfiguration
     val fingerprint = Seq("customer.parquet", "orders.parquet").map { f =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/$f")
-      val pfs = p.getFileSystem(hconf)
-      if (!pfs.exists(p)) "absent"
-      else pfs.listStatus(p)
-        .filterNot(_.getPath.getName.startsWith("_"))
+      Tables.dataFiles(p.getFileSystem(hconf), p)
         .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .sorted.mkString(",")
+        .mkString(",")
     }.mkString("|")
     // two-component suffix (r7): <dirHash>_<dataHash>_probe. Eviction
     // below is scoped to THIS dir-hash, so a concurrent JVM running

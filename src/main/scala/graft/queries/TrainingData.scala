@@ -1325,27 +1325,26 @@ object TrainingData {
 
   val q65Sql: String = q64Sql
 
-  /** q65's twin forced through the AGGREGATE assignment regime
-    * (`literalCellBudget = 1` — every fixture otherwise fits the
-    * literal budget, so the `min_by` path that actually runs at
-    * 10⁹-vector/nlist~3·10⁴ scale would never face a cross-engine
-    * oracle): identical construction, identical expected output,
-    * identical DuckDB brute-force twin. The index build's corpus
-    * assignment goes broadcast-join → map-side partial `min_by` →
-    * one corpus-sized exchange (PlanShapeSpec asserts the shape);
-    * the probe side stays literal (query-sized by contract).
+  /** q65 probed at `nprobe = 1`: identical construction, identical
+    * expected output, identical DuckDB brute-force twin. Each planted
+    * twin carries its query's exact vector, so the centroid scorer
+    * ([[graft.operators.Similarity.rankCentroids]]) puts both in the
+    * same list and the single probed partition must hold the twin:
+    * the entry gates the scorer's argmin and tie-break (cosine desc,
+    * centroid id asc) on the build and the probe side alike, and the
+    * narrowest partition-pruned read (one `centroid_id=` directory per
+    * query) against the oracle.
     */
-  def q65bIvfTopKAgg(s: SparkSession, dir: String): DataFrame = {
+  def q65bIvfTopKOneProbe(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val planted = emb.unionAll(
       emb.filter(col("vec_id") < 20)
         .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
     val idxPath = scratchPath("q65b_idx", dir)
-    Similarity.writeIvfIndex(planted, idxPath, "vec_id", "embedding",
-      nlist = 16, literalCellBudget = 1)
+    Similarity.writeIvfIndex(planted, idxPath, "vec_id", "embedding", nlist = 16)
     val queries = emb.filter(col("vec_id") < 20)
     Similarity.ivfTopKFromIndex(s, idxPath, queries, "vec_id", "embedding",
-        k = 1, nprobe = 4)
+        k = 1, nprobe = 1)
       .select(col("query_id"), col("neighbor_id"))
       .orderBy("query_id")
   }
@@ -8696,7 +8695,7 @@ object TrainingData {
     "q74_lsh_multiprobe"   -> q74MultiProbe _,
     "q76_kmeans_counts"    -> q76KmeansCounts _,
     "q65_ivf_topk"         -> q65IvfTopK _,
-    "q65b_ivf_topk_agg"    -> q65bIvfTopKAgg _,
+    "q65b_ivf_topk_agg"    -> q65bIvfTopKOneProbe _,
     "q66_pack_rows"        -> q66PackRows _,
     "q77_bpe_merges"       -> q77BpeMerges _,
     "q78_streaming_ingest" -> q78StreamingIngest _,

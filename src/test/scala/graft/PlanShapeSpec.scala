@@ -187,6 +187,23 @@ class PlanShapeSpec extends SparkSpec {
                               // domains: seat window + two scalars on
                               // the per-domain count frame; selection
                               // windows keyed (domain, bucket)
+      "q76_kmeans_counts",    // the k-means centroid row: ONE
+                              // collect_list over the ≤nlist-row
+                              // checkpointed centroid frame per
+                              // assignment (partial buffers cross,
+                              // one row broadcasts back onto the
+                              // corpus); the per-dimension means are
+                              // ordinary keyed aggregates
+      "q232_prototype_prune", // the q76 centroid row (k-means fit and
+                              // final assignment); the per-cluster
+                              // ranks are centroid-keyed windows
+      "q158_pq_topk",         // the q76 centroid row once per PQ
+                              // codebook (≤nlist rows each), for the
+                              // encode and for the ADC query tables
+      "q128_winsorize",       // the (low, high) threshold row: ONE max
+                              // pair over the 2-row quantile frame
+                              // (partial buffers cross), broadcast
+                              // back onto the clamp projection
       "q108_histogram_quantiles") // the rank-walk window runs over the
                               // MERGED HISTOGRAM (≤ bins = 256 rows by
                               // construction) — the corpus scan behind
@@ -320,11 +337,13 @@ class PlanShapeSpec extends SparkSpec {
       s"value column crosses an exchange in q100:\n${bad.mkString("\n")}")
   }
 
-  test("IVF index build: centroid assignment plans NO exchange at all") {
+  test("IVF index build: no shuffle above the corpus scan, centroids broadcast") {
     // the r5 scale nit: the old broadcast-expand + window formulation
     // sent every corpus vector through an exchange nlist times during
-    // index build. The assignment must now be scan → projection →
-    // explode — a 10⁹-vector build is then embarrassingly parallel.
+    // index build. The assignment must be scan → broadcast-nested-loop
+    // join with the one-row centroid frame → projection → explode — a
+    // 10⁹-vector build is then embarrassingly parallel. Shuffles may
+    // only feed the centroid row's own (broadcast) side.
     import org.apache.spark.sql.functions.col
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
@@ -333,57 +352,12 @@ class PlanShapeSpec extends SparkSpec {
       .orderBy(col("centroid_id")).limit(8)
     val assigned = graft.operators.Similarity
       .assignToCentroid(emb, centroids, "vec_id", "embedding", "neighbor_id")
-    val p = assigned.queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange"),
-      s"IVF build assignment shuffles the corpus:\n$p")
-  }
-
-  test("IVF aggregate-regime assignment: corpus crosses ONE exchange, partially aggregated") {
-    // the 10⁹-vector path (nlist × dim past the literal budget): the
-    // plan must be broadcast-join → map-side partial min_by → ONE
-    // corpus-keyed exchange → final aggregate. Partial aggregation
-    // before the shuffle is what keeps the exchange un-amplified (≤ one
-    // row per corpus id per task, never nlist× the corpus).
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }
-      p +: kids.flatMap(flatten)
-    }
-    val emb = graft.sources.Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    val centroids = emb
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("_centroid"))
-      .orderBy(col("centroid_id")).limit(8)
-    val assigned = graft.operators.Similarity.assignToCentroid(
-      emb, centroids, "vec_id", "embedding", "neighbor_id",
-      literalCellBudget = 1)
     assigned.collect() // finalize the AQE plan
-    val nodes = flatten(assigned.queryExecution.executedPlan)
-    val shuffles = nodes.collect { case e: ShuffleExchangeLike => e }
-    assert(shuffles.size == 1,
-      s"aggregate-regime assignment should shuffle exactly once, got ${shuffles.size}")
-    val partialBelow = flatten(shuffles.head.child).exists {
-      case h: BaseAggregateExec =>
-        h.aggregateExpressions.exists(_.mode == Partial)
-      case _ => false
-    }
-    assert(partialBelow,
-      "no partial aggregate below the exchange — the shuffle would carry nlist-amplified rows")
-    val finalAbove = nodes.exists {
-      case h: BaseAggregateExec =>
-        h.aggregateExpressions.exists(_.mode == Final)
-      case _ => false
-    }
-    assert(finalAbove, "no final aggregate above the exchange")
+    val shuffles = StreamedShuffles(assigned)
+    assert(shuffles.isEmpty,
+      s"IVF build assignment shuffles the corpus:\n${shuffles.mkString("\n")}")
+    assert(assigned.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"),
+      s"centroids not broadcast:\n${assigned.queryExecution.executedPlan}")
   }
 
   test("passage scrub: shingle strings never cross an exchange; content crosses once") {

@@ -71,20 +71,28 @@ class QuantizeSpec extends SparkSpec {
     val cbs = Quantize.pqCodebooks(emb, "vec_id", "embedding",
       subDim = 32, m = 2, nlist = 8, iters = 1)
     val codes = Quantize.pqEncode(emb, "vec_id", "embedding", cbs, 32)
-    // plan: scan → projection, no Exchange
-    assert(!codes.queryExecution.executedPlan.toString.contains("Exchange"),
-      "PQ encode must not shuffle")
-    // codes agree with the shared assignment operator per subspace
-    for (j <- 0 to 1) {
-      val sub = emb.select(col("vec_id"),
-        slice(col("embedding"), j * 32 + 1, 32).as("_sub"))
-      val want = graft.operators.Similarity
-        .assignToCentroid(sub, cbs(j), "vec_id", "_sub", "_vid")
-        .select(col("_vid"), col("centroid_id")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val got = codes.select(col("vec_id"), col(s"code_$j")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == want, s"subspace $j codes diverge from assignToCentroid")
+    // plan: scan → projection; only the codebook rows' own broadcast
+    // sides may shuffle, never the corpus
+    codes.collect() // finalize the AQE plan
+    assert(StreamedShuffles(codes).isEmpty, "PQ encode must not shuffle the corpus")
+    // codes agree with the shared assignment operator per subspace —
+    // for float vectors and for the same corpus widened to double
+    val dbl = emb.withColumn("embedding", col("embedding").cast("array<double>"))
+    val dblCbs = Quantize.pqCodebooks(dbl, "vec_id", "embedding",
+      subDim = 32, m = 2, nlist = 8, iters = 1)
+    for ((corpus, books) <- Seq(emb -> cbs, dbl -> dblCbs)) {
+      val encoded = Quantize.pqEncode(corpus, "vec_id", "embedding", books, 32)
+      for (j <- 0 to 1) {
+        val sub = corpus.select(col("vec_id"),
+          slice(col("embedding"), j * 32 + 1, 32).as("_sub"))
+        val want = graft.operators.Similarity
+          .assignToCentroid(sub, books(j), "vec_id", "_sub", "_vid")
+          .select(col("_vid"), col("centroid_id")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val got = encoded.select(col("vec_id"), col(s"code_$j")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == want, s"subspace $j codes diverge from assignToCentroid")
+      }
     }
   }
 

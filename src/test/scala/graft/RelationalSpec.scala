@@ -92,4 +92,27 @@ class RelationalSpec extends SparkSpec {
     assert(rows.map(_.getAs[String]("risk_category")).toSet
       .subsetOf(Set("low", "medium", "high")))
   }
+
+  test("q57b's bucketed-table fingerprint ignores .crc sidecars") {
+    // the cached bucketed layout keys on the data files only: a
+    // checksum sidecar next to a part file must not start a second
+    // generation of bucketed tables
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft-q57b").toString
+    Seq("customer.parquet", "orders.parquet").foreach { f =>
+      Files.createDirectories(Paths.get(dir, f))
+      Files.copy(Paths.get(sfDir, f), Paths.get(dir, f, "part-00000.parquet"))
+    }
+    def generations(): Set[String] = {
+      Relational.q57bBucketedJoinProbe(spark, dir).collect()
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(n => n.contains("_bkt_") && n.endsWith("_probe")).toSet
+        .filter(_.contains(s"_${dir.hashCode & 0x7fffffff}_"))
+    }
+    val before = generations()
+    assert(before.size == 2, s"expected one customer + one orders table: $before")
+    Files.write(Paths.get(dir, "orders.parquet", ".part-00000.parquet.crc"),
+      Array[Byte](1, 2, 3))
+    assert(generations() == before)
+  }
 }

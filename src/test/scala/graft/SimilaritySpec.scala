@@ -170,26 +170,58 @@ class SimilaritySpec extends SparkSpec {
       assert(top1(q) == q + 900000L, s"refined IVF lost the twin of $q"))
   }
 
-  test("IVF centroid assignment: literal and aggregate regimes agree exactly") {
-    // the literal regime (centroids embedded in one projection, zero
-    // shuffle) serves nlist x dim up to the plan budget; past it the
-    // build switches to broadcast-join + min_by aggregation (corpus
-    // crosses the exchange ONCE, never nlist-amplified). Both must
-    // produce the identical assignment, tie-breaks included.
-    import graft.operators.Similarity
-    val corpus = emb.select(col("vec_id"), col("embedding"))
-    val centroids = corpus
+  test("centroid scorer matches an independent cross-join + row_number reference") {
+    // the reference ranks every (row, centroid) pair with a window over
+    // (cosine desc nulls last, centroid id asc) — the contract the
+    // scorer's sorted (negsim, cid) array must reproduce exactly
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.VectorFunctions
+    import spark.implicits._
+    def reference(df: DataFrame, cents: DataFrame, nprobe: Int): Set[(Long, Long, Int)] = {
+      val w = Window.partitionBy(col("vec_id"))
+        .orderBy(desc_nulls_last("_sim"), asc("centroid_id"))
+      df.crossJoin(cents)
+        .withColumn("_sim", VectorFunctions.cosine(col("embedding"), col("_centroid")))
+        .withColumn("_r", row_number().over(w))
+        .filter(col("_r") <= nprobe)
+        .select(col("vec_id").cast("long"), col("centroid_id").cast("long"), col("_r"))
+        .as[(Long, Long, Int)].collect().toSet
+    }
+    def scorer(df: DataFrame, cents: DataFrame, nprobe: Int): Set[(Long, Long, Int)] =
+      Similarity.rankCentroids(df, cents, "embedding", nprobe, "_near")
+        // rank = 1-based position in the scorer's nearest-first array
+        .select(col("vec_id").cast("long"), posexplode(col("_near")).as(Seq("_p", "_b")))
+        .select(col("vec_id"), col("_b.cid").cast("long"), (col("_p") + 1).as("_r"))
+        .as[(Long, Long, Int)].collect().toSet
+    val base = emb.filter(col("vec_id") < 40).select(col("vec_id"), col("embedding"))
+    // a zero vector (NULL cosine everywhere: lowest id wins, as nulls
+    // sort last) and a duplicated centroid (id 107 repeats vector 3:
+    // the lower id must win every tie)
+    val zero = Seq((1000L, Array.fill(64)(0.0f))).toDF("vec_id", "embedding")
+    val corpus = base.unionByName(zero)
+    val cents = base.filter(col("vec_id") < 8)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("_centroid"))
-      .orderBy("centroid_id").limit(8)
-    def collect(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("neighbor_id"), col("centroid_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaLiteral = collect(Similarity.assignNearestLiteral(
-      corpus, centroids, "vec_id", "embedding", "neighbor_id", "_cv", nprobe = 1))
-    val viaAgg = collect(Similarity.assignNearestAgg(
-      corpus, centroids, "vec_id", "embedding", "neighbor_id", "_cv"))
-    assert(viaLiteral == viaAgg,
-      s"regimes disagree on ${(viaLiteral diff viaAgg) ++ (viaAgg diff viaLiteral)}")
+      .unionByName(base.filter(col("vec_id") === 3)
+        .select(lit(107L).as("centroid_id"), col("embedding").as("_centroid")))
+    // each variant rewrites a frame given its (id, vector) column names
+    val variants = Seq[(String, (DataFrame, String, String) => DataFrame)](
+      "float" -> ((df, _, _) => df),
+      "double" -> ((df, _, v) => df.withColumn(v, col(v).cast("array<double>"))),
+      "int id" -> ((df, id, _) => df.withColumn(id, col(id).cast("int"))))
+    for ((name, f) <- variants; nprobe <- Seq(1, 3)) {
+      val (d, c) = (f(corpus, "vec_id", "embedding"), f(cents, "centroid_id", "_centroid"))
+      val (want, got) = (reference(d, c, nprobe), scorer(d, c, nprobe))
+      assert(got == want, s"$name nprobe=$nprobe: ${(got diff want) ++ (want diff got)}")
+      assert(got.size == 41 * nprobe)
+      assert(got.contains((3L, 3L, 1)) && !got.exists(t => t._2 == 107L && t._3 == 1),
+        s"$name: duplicated centroid beat the lower id")
+      assert(got.contains((1000L, 0L, 1)), s"$name: zero vector not on the lowest id")
+    }
+    val empty = cents.filter(lit(false))
+    val e = intercept[Exception](
+      Similarity.assignToCentroid(corpus, empty, "vec_id", "embedding", "_id").collect())
+    assert(e.getMessage.contains("empty centroid set"), e.getMessage)
   }
 
   test("ANN plans never sort data through a global (empty-partition) window") {

@@ -73,3 +73,25 @@ object SparkEvents {
       plans.toArray(Array.empty[String]).toSeq)
   }
 }
+
+/** The shuffle exchanges of `df`'s executed plan that do not feed a
+  * broadcast: the ones its streamed side (a scanned corpus) crosses.
+  * Run `df` first to see the final adaptive plan.
+  */
+object StreamedShuffles {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec, QueryStageExec}
+  import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+
+  def apply(df: DataFrame): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case _: BroadcastExchangeLike | _: BroadcastQueryStageExec => Nil
+      case q: QueryStageExec => walk(q.plan)
+      case e: ShuffleExchangeLike => e +: walk(e.child)
+      case other => other.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+}

@@ -73,8 +73,9 @@ class TablesSpec extends SparkSpec {
   }
 
   test("building a read-path query starts no Spark job") {
-    // the etl-readpath workload's queries (q128 collects its winsorize
-    // cut-offs at build time) and five fixture-only Relational/Geo ones
+    // the etl-readpath workload's queries, five fixture-only
+    // Relational/Geo ones, the geo queries with derived station/fence
+    // sets, and the IVF queries whose centroids ride a broadcast row
     val names = Seq(
       "q01_pricing_summary", "q02_filter_project", "q03_shipping_priority",
       "q04_order_priority", "q05_local_supplier", "q06_revenue_filter",
@@ -86,7 +87,9 @@ class TablesSpec extends SparkSpec {
       "q133_golden_records", "q180_l_diversity", "q186_t_closeness",
       "q206_benford_audit",
       "q62_grouping_sets", "q202_unpivot", "q116_trajectory_stats",
-      "q127_trajectory_similarity", "q130_resample_tracks")
+      "q127_trajectory_similarity", "q130_resample_tracks",
+      "q128_winsorize", "q118_nearest_station", "q121_geofence_episodes",
+      "q124_geofence_alerts", "q235b_bitext_ivf", "q238b_hard_negatives_ivf")
     names.foreach { n =>
       val jobs = SparkEvents.capture(spark)(SparkEntry.queries(n)(spark, sfDir): Unit).jobs
       assert(jobs.isEmpty, s"$n built with jobs: $jobs")
