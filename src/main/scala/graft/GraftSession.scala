@@ -30,10 +30,7 @@ object GraftSession {
       // joins 2.3–3× (q114 66 s → 154/190 s — the wedge stream pays
       // mapper×reducer shuffle-segment fan-out at 256 partitions).
       // Verdict: partition count must track the STAGE's data, not a
-      // session constant — heavy operators size their own exchanges
-      // (Dedup.exactJaccardPairs scales its verify-join partitions
-      // from the measured candidate count); the session default stays
-      // at the core count.
+      // session constant; the session default stays at the core count.
       // idempotent per-day reloads replace only written partitions
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       // events.ts is parquet TIMESTAMP(NANOS); read as long + convert

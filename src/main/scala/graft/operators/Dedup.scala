@@ -1001,8 +1001,8 @@ object Dedup {
     * (both through [[graft.operators.Similarity.rankCentroids]]: the
     * centroids ride one broadcast row, the corpus never shuffles for
     * them), then a join of the corpus against
-    * nlist × K dominator rows — broadcast when that side fits under
-    * ~64 MB of vectors, otherwise a keyed exchange on centroid_id (the
+    * nlist × K dominator rows, left to the planner: a broadcast while
+    * that side is small, otherwise a keyed exchange on centroid_id (the
     * corpus crosses once; per-key dominator fanout is ≤ K by
     * construction, so the join output is ≤ K-amplified and filtered
     * immediately). The cosine verification is the codegen'd
@@ -1027,14 +1027,8 @@ object Dedup {
           assigned, keys = Seq(col("centroid_id")),
           order = Seq(col("_id").asc), k = maxDominators)
         .select(col("centroid_id"), col("_id").as("_did"), col("_cv").as("_dv"))
-      val dim = vecs.select(size(col(vecCol))).head().getInt(0)
-      // ≤ nlist × K rows of dim floats: hint the broadcast only while
-      // that provably fits; past it, Catalyst plans the keyed exchange
-      val domSide =
-        if (nlist.toLong * maxDominators * dim * 4L <= (64L << 20)) broadcast(dominators)
-        else dominators
       val doomed = assigned
-        .join(domSide, Seq("centroid_id"))
+        .join(dominators, Seq("centroid_id"))
         .filter(col("_did") < col("_id") &&
           graft.functions.VectorFunctions.cosine(col("_dv"), col("_cv")) >= minCosine)
         .select(col("_id")).distinct()
@@ -1216,63 +1210,45 @@ object Dedup {
         .withColumn("_rn", row_number().over(w).cast(LongType))
         .filter(col("_rn") <= p)
         .select(col("_g"), col("_id"), col("_n"), col("_rn"))
-      val cands = prefixes.as("a")
-        .join(prefixes.as("b"),
+      // The prefix join's exchange rows are ~32-byte probes that each
+      // expand into an O(prefix-bucket) run of pairs — CPU-dense and
+      // byte-light, the shape AQE's byte-targeted coalescing
+      // under-parallelizes (measured: the prefix join + distinct stage
+      // coalesced 32 → 10 partitions at sf0.1, 1.05 s wall on 32 idle
+      // cores). A by-number repartition on the token keeps the session
+      // partition count for the join: AQE never coalesces it, and both
+      // join sides reuse the one exchange.
+      val spark = df.sparkSession
+      val sessParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val keyedPrefixes = prefixes.repartition(sessParts, col("_g"))
+      val cands = keyedPrefixes.as("a")
+        .join(keyedPrefixes.as("b"),
           col("a._g") === col("b._g") && col("a._id") < col("b._id") &&
             den * least(col("a._n"), col("b._n")) >=
               num * greatest(col("a._n"), col("b._n")) &&
             (num + den) * (lit(1L) + least(col("a._n") - col("a._rn"),
               col("b._n") - col("b._rn"))) >=
               num * (col("a._n") + col("b._n")))
-        .select(col("a._id").as("_ida"), col("b._id").as("_idb"))
+        .select(col("a._id").as("_ida"), col("b._id").as("_idb"),
+          col("a._n").as("_na"), col("b._n").as("_nb"))
         .distinct()
       val ov = graft.expressions.SortedOverlapExpression
         .sortedOverlap(col("_sha"), col("_shb")).cast(LongType)
-      // Threshold-guarded broadcast of the per-doc shingle frame for the
-      // two verify joins: when the doc→sorted-set map fits the broadcast
-      // budget, candidate pairs stay where the prefix join left them and
-      // no exchange ever carries a pair-DUPLICATED array (each array
-      // travels once, inside the broadcast). Beyond the budget the guard
-      // falls back to the keyed join — never an unguarded hint.
-      val rawThresh = df.sparkSession.conf
-        .get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      val threshold =
-        if (rawThresh.trim.startsWith("-")) -1L
-        else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(rawThresh)
-      val shBytes = sh.queryExecution.optimizedPlan.stats.sizeInBytes
-      def side(v: DataFrame): DataFrame =
-        if (threshold > 0 && shBytes <= threshold) broadcast(v) else v
-      // Size the verify join's exchanges from the MEASURED candidate
-      // count: each surviving pair carries BOTH sorted shingle arrays
-      // (~2× mean set size × 8 B), so at a fixed session partition
-      // count the per-partition payload grows with the corpus until
-      // it spill-thrashes (round-9 sf3 sweep: 3× the data took ~10×
-      // the time at 32 fixed partitions; a global 8× initial-partition
-      // bump regressed the graph family instead — stage-local sizing
-      // is the correct shape). One extra count over the (long, long)
-      // candidate frame is noise next to the join it right-sizes.
-      val spark = df.sparkSession
-      // The candidate join's exchange rows are ~32-byte probes that
-      // each trigger an O(prefix-bucket) pair expansion — CPU-dense,
-      // byte-light, exactly the shape AQE's byte-targeted coalescing
-      // under-parallelizes (measured: the prefix join + distinct stage
-      // coalesced 32 → 10 partitions at sf0.1, 1.05 s wall on 32 idle
-      // cores). Pin the advisory low for THIS materialization so the
-      // exchange keeps the session partition count; AQE only coalesces
-      // downward, so at scale this means "don't squash", never "split
-      // into millions".
-      // (AQE's parallelism-first coalescing bottoms out at
-      // minPartitionSize — advisoryPartitionSizeInBytes is ignored on
-      // that path — so that is the knob to pin.)
-      val minPartKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-      val prevMinPart = spark.conf.get(minPartKey)
-      spark.conf.set(minPartKey, "64k")
-      val candsMat =
-        try cands.localCheckpoint(true)
-        finally spark.conf.set(minPartKey, prevMinPart)
-      val meanSetBytes = Option(sh.agg(avg(col("_n"))).collect()(0).get(0))
-        .map(_.asInstanceOf[Double]).getOrElse(0.0) * 8
-      val pairBytes = (2 * meanSetBytes + 64).toLong
+      // Size the verify joins from the candidate checkpoint's own
+      // observe() metrics: each surviving pair carries BOTH sorted
+      // shingle arrays (8 B per token), so at a fixed partition count
+      // the per-partition payload grows with the corpus until it
+      // spill-thrashes (round-9 sf3 sweep: 3× the data took ~10× the
+      // time at 32 fixed partitions; a global 8× initial-partition bump
+      // regressed the graph family instead — stage-local sizing is the
+      // correct shape).
+      val obs = org.apache.spark.sql.Observation()
+      val candsMat = cands
+        .observe(obs, count(lit(1)).as("pairs"),
+          coalesce(sum(col("_na") + col("_nb")), lit(0L)).as("tokens"))
+        .localCheckpoint(true)
+      val verifyBytes = obs.get("tokens").asInstanceOf[Long] * 8 +
+        obs.get("pairs").asInstanceOf[Long] * 64
       // 256 MB of verify payload per task, capped at 8× the cluster
       // parallelism: below the cap the count is bytes-driven (the
       // spill fix); the cap keeps mapper×reducer shuffle-segment
@@ -1281,50 +1257,27 @@ object Dedup {
       // ~8× parallelism; a 1000-executor cluster's cap is ~64k, i.e.
       // effectively bytes-driven)
       val targetPartBytes = 256L << 20
-      val sessParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val parallelismCap = spark.sparkContext.defaultParallelism * 8
-      val verifyParts = math.min(parallelismCap, math.max(sessParts,
-        ((candsMat.count() * pairBytes) / targetPartBytes).toInt))
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val prevInit = spark.conf.getOption(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-      spark.conf.set("spark.sql.shuffle.partitions", verifyParts.toString)
-      spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        verifyParts.toString)
-      try {
-        // Broadcast arm: no exchange follows candsMat, so the verify
-        // compute inherits the checkpoint's (AQE-coalesced) partition
-        // count — an explicit round-robin repartition to the measured
-        // verifyParts spreads the merge walks; AQE never coalesces a
-        // user-specified repartition. Keyed arm: the sized-conf
-        // exchanges below handle it (rows there carry the arrays, so
-        // byte-targeted sizing is correct).
-        val verifyBase =
-          if (threshold > 0 && shBytes <= threshold)
-            candsMat.repartition(verifyParts)
-          else candsMat
-        verifyBase
-          .join(side(sh.select(col("_id").as("_ida"), col("_sh").as("_sha"),
-            col("_n").as("_na"))), Seq("_ida"))
-          .join(side(sh.select(col("_id").as("_idb"), col("_sh").as("_shb"),
-            col("_n").as("_nb"))), Seq("_idb"))
-          .withColumn("_ov", ov)
-          .filter(den * col("_ov") >= num * (col("_na") + col("_nb") - col("_ov")))
-          .select(col("_ida").as("doc_a"), col("_idb").as("doc_b"),
-            col("_ov").as("overlap_sz"), col("_na").as("size_a"),
-            col("_nb").as("size_b"))
-          .orderBy(col("doc_a"), col("doc_b"))
-          .localCheckpoint(true) // materializes HERE, under the sized conf
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        prevInit match {
-          case Some(v) => spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum", v)
-          case None => spark.conf.unset(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-        }
-      }
+      val verifyParts = math.min(parallelismCap,
+        math.max(sessParts, (verifyBytes / targetPartBytes).toInt))
+      // One by-number repartition of the (id, id, size, size) pairs
+      // spreads the merge walks over verifyParts tasks whether the
+      // planner broadcasts the shingle frame or shuffles it to match
+      // (AQE never coalesces a by-number repartition). A second one on
+      // _idb would ship every pair's _sha array through an exchange the
+      // broadcast plan does not need (measured +15 % on q112 at sf0.1);
+      // the _idb join's own exchange, if the planner adds one, is
+      // sized by AQE.
+      candsMat.repartition(verifyParts, col("_ida"))
+        .join(sh.select(col("_id").as("_ida"), col("_sh").as("_sha")), Seq("_ida"))
+        .join(sh.select(col("_id").as("_idb"), col("_sh").as("_shb")), Seq("_idb"))
+        .withColumn("_ov", ov)
+        .filter(den * col("_ov") >= num * (col("_na") + col("_nb") - col("_ov")))
+        .select(col("_ida").as("doc_a"), col("_idb").as("doc_b"),
+          col("_ov").as("overlap_sz"), col("_na").as("size_a"),
+          col("_nb").as("size_b"))
+        .orderBy(col("doc_a"), col("doc_b"))
+        .localCheckpoint(true)
     } finally { sh.unpersist() }
   }
 }

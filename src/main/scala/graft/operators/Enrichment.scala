@@ -22,20 +22,16 @@ object Enrichment {
     def attach(df: DataFrame): DataFrame
   }
 
-  /** J1 as a broadcast left join: a small geocode dimension keyed by
+  /** J1 as a left join against a small geocode dimension keyed by
     * rounded (lat, lon) cells. Unmatched rows keep NULLs — matching the
     * reference's "leave None on failure" behavior (`enrichment.py:52-59`).
     *
-    * Scale: a typical dimension is bounded by distinct OBSERVED
-    * coordinate cells → broadcast, and the fact side never shuffles.
-    * But a full-globe precision-2 dimension (~65M cells) is far past
-    * sane broadcast sizes, so the explicit `broadcast()` hint — which
-    * would OVERRIDE `spark.sql.autoBroadcastJoinThreshold` and pin the
-    * whole dim in every executor — is applied only while the dim's
-    * estimated plan size fits the session's threshold. Past it, the
-    * join is left unhinted: Catalyst plans a shuffle join, which is the
-    * correct (if slower) shape for an outsized dim; pre-bucket both
-    * sides on the cell key if the join recurs.
+    * Scale: the join carries no hint. A typical dimension is bounded by
+    * distinct OBSERVED coordinate cells, so Catalyst's size-based
+    * selection broadcasts it and the fact side never shuffles; an
+    * outsized dimension (a full-globe precision-2 grid, ~65M cells) is
+    * planned as a shuffle join, and AQE converts it to a broadcast at
+    * run time if the dimension turns out small after all.
     */
   final class BroadcastGeocode(lookup: DataFrame, precision: Int = 2)
       extends GeocodeProvider {
@@ -49,17 +45,7 @@ object Enrichment {
         col("lon_cell").as("_lon_cell"),
         col("county").as("_geo_county"),
         col("cityOrTown").as("_geo_city"))
-      // guard the hint with the same stats Catalyst's auto-broadcast
-      // uses; -1 (threshold disabled) means never hint
-      val raw = lookup.sparkSession.conf
-        .get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      val threshold =
-        if (raw.trim.startsWith("-")) -1L
-        else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
-      val dimBytes = dim.queryExecution.optimizedPlan.stats.sizeInBytes
-      val hinted =
-        if (threshold > 0 && dimBytes <= threshold) broadcast(dim) else dim
-      keyed.join(hinted, Seq("_lat_cell", "_lon_cell"), "left")
+      keyed.join(dim, Seq("_lat_cell", "_lon_cell"), "left")
         .withColumn("county", col("_geo_county"))
         .withColumn("cityOrTown", col("_geo_city"))
         .drop("_lat_cell", "_lon_cell", "_geo_county", "_geo_city")

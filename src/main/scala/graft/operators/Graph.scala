@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -532,14 +533,9 @@ object Graph {
     * frontier-join count on a seed sample (q215's gate pattern — the
     * q29 sketch-contract discipline).
     *
-    * Session-conf caveat: for the duration of the hop jobs this call
-    * raises `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
-    * on the session (restored in `finally`). Queries running
-    * CONCURRENTLY on the same SparkSession from other threads observe
-    * the raised threshold — never a correctness issue (it only moves
-    * the aggregate's hash-map→sort spill point), but if plan-shape
-    * stability matters to a concurrent workload, run this on its own
-    * session.
+    * The register-bearing hops run on a clone of the caller's session
+    * that raises `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
+    * to the node count; the caller's session conf is never written.
     *
     * @return (id, est_reach): BIGINT sketch estimate per node
     */
@@ -549,11 +545,13 @@ object Graph {
     // edge-scale frame: serialized checkpoint (the round-11 sf10 probe
     // measured the deserialized default OOM-ing on a 239M-row edge
     // list before the first hop — see graft.plans.Checkpoints)
+    val eObs, bObs = Observation()
     val e = Checkpoints.serialized(
       edges.select(col(srcCol).cast(LongType).as("_src"),
           col(dstCol).cast(LongType).as("_dst"))
         .filter(col("_src").isNotNull && col("_dst").isNotNull)
-        .distinct())
+        .distinct()
+        .observe(eObs, count(lit(1)).as("n")))
     val spark = edges.sparkSession
     val nodes = e.select(col("_src").as("id"))
       .unionByName(e.select(col("_dst").as("id"))).distinct()
@@ -565,14 +563,17 @@ object Graph {
     // edge×blob join. Halves the blob joins of a 2-hop run. Its
     // session-default sort fallback handles only narrow long pairs —
     // cheap at any scale.
-    var b = Checkpoints.serialized(
+    val b1 = Checkpoints.serialized(
       nodes.select(col("id"), col("id").as("_m"))
         .unionByName(e.select(col("_src").as("id"), col("_dst").as("_m")))
         .groupBy(col("id"))
-        .agg(expr(s"hll_sketch_agg(_m, $lgConfigK)").as("_sk")))
-    // |nodes| read for free off the materialized hop-1 result: it
-    // drives the register-bearing hops' aggregation regime below.
-    val nNodes = b.count()
+        .agg(expr(s"hll_sketch_agg(_m, $lgConfigK)").as("_sk"))
+        .observe(bObs, count(lit(1)).as("n")))
+    // |nodes| and |edges| ride the two checkpoints as observe()
+    // metrics: they drive the register-bearing hops' aggregation
+    // regime below.
+    val nNodes = bObs.get("n").asInstanceOf[Long]
+    val nEdges = eObs.get("n").asInstanceOf[Long]
     // hll_union_agg is an ObjectHashAggregate, and the session-default
     // sort-based fallback threshold (128 groups) made every register-
     // bearing hop SORT its edge×blob stream instead of folding it
@@ -580,8 +581,10 @@ object Graph {
     // 9× time for 3× data, pure spill thrash; explicit exchange
     // re-sizing measured a NON-fix at 273 vs 232 s). The right bound
     // is structural — per task the map holds ≤ |nodes| register
-    // states — so raise the threshold to the measured node count for
-    // the duration of the (eagerly materialized) hops, restore after.
+    // states — so the hops run on a clone of the session whose
+    // threshold is the measured node count. The threshold has no
+    // plan-level device; the clone keeps it out of the caller's conf,
+    // and the two checkpoints move into it as plans, not rows.
     //
     // Map-side partial aggregation holds one ~(K + few hundred)-byte
     // JVM sketch object per group a task has SEEN — up to |nodes| per
@@ -595,69 +598,57 @@ object Graph {
     // sort-merge passes. Both regimes produce identical registers;
     // only the exchange placement differs. (sf3 measured: 232 s
     // before → 76 s after, at the default heap.)
-    // Conf-scope decision (written down, per the round-10 review): the
-    // raised threshold is a SESSION-level override, restored in
-    // `finally`. Every hop below ends in an EAGER localCheckpoint, so
-    // the override is live only while this call runs its own jobs; the
-    // one observable window is a query launched CONCURRENTLY on the
-    // same SparkSession from another thread, which would run its
-    // ObjectHashAggregates with the raised fallback threshold —
-    // harmless for correctness (the threshold only moves the
-    // hash-map→sort spill point) but a plan-shape perturbation. True
-    // isolation would need a cloned session, and rebinding the
-    // register-blob frames into it costs a per-hop InternalRow→Row
-    // round trip over nodes × sketchBytes — worse than the exposure.
-    // Callers running concurrent same-session queries: see scaladoc.
-    val threshKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val prevThresh = spark.conf.get(threshKey)
-    spark.conf.set(threshKey, math.max(128L, nNodes + 1).toString)
-    try {
-      val stateBytes = (1L << lgConfigK) + 256
-      // Per-EXECUTOR task concurrency: on a cluster each executor's
-      // aggregation hash maps hold at most (its own task slots) ×
-      // |nodes| register states, so the budget comparison must be
-      // executor-local — defaultParallelism (cluster-wide slots) would
-      // overstate per-JVM pressure by the executor count. Under
-      // local[*] the driver IS the one executor, so cluster-wide and
-      // per-JVM concurrency coincide.
-      val sc = spark.sparkContext
-      val concurrency =
-        if (sc.isLocal) sc.defaultParallelism.toLong
-        else sc.getConf.getInt("spark.executor.cores", 1).toLong
-      val exchangeFirst =
-        exchangeFirstRegime(nNodes, stateBytes, concurrency,
-          executorAggBudgetBytes(sc))
-      // In the exchange-first regime, size that exchange from the
-      // MEASURED blob volume (the q112 convention): at the session
-      // default the per-task slice (edge×blob / partitions) left the
-      // 30× run flaky-OOM under concurrent page allocation; ~256 MB
-      // of register payload per task is spill-safe.
-      val exchangeParts =
-        if (!exchangeFirst) 0
-        else {
-          val vol = e.count() * (stateBytes / 2 + 64)
-          math.max(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-            math.min(16L * concurrency, vol / (512L << 20) + 1).toInt)
-        }
-      for (_ <- 2 to hops) {
-        val joined = e.join(b, col("id") === col("_dst"))
-        val fromNbrs =
-          (if (exchangeFirst) joined.repartition(exchangeParts, col("_src"))
-           else joined)
-            .groupBy(col("_src"))
-            .agg(expr("hll_union_agg(_sk)").as("_nb"))
-            .withColumnRenamed("_src", "id")
-        val nextB = Checkpoints.serialized(
-          b.join(fromNbrs, Seq("id"), "left_outer")
-            .select(col("id"),
-              when(col("_nb").isNull, col("_sk"))
-                .otherwise(expr("hll_union(_sk, _nb)")).as("_sk")))
-        Checkpoints.drop(b) // superseded hop — release register blobs
-        b = nextB
+    val hopSession = ColumnBridge.isolatedSession(spark, Map(
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
+        math.max(128L, nNodes + 1).toString))
+    val hopEdges = ColumnBridge.rebind(hopSession, e)
+    var b = ColumnBridge.rebind(hopSession, b1)
+    val stateBytes = (1L << lgConfigK) + 256
+    // Per-EXECUTOR task concurrency: on a cluster each executor's
+    // aggregation hash maps hold at most (its own task slots) ×
+    // |nodes| register states, so the budget comparison must be
+    // executor-local — defaultParallelism (cluster-wide slots) would
+    // overstate per-JVM pressure by the executor count. Under
+    // local[*] the driver IS the one executor, so cluster-wide and
+    // per-JVM concurrency coincide.
+    val sc = spark.sparkContext
+    val concurrency =
+      if (sc.isLocal) sc.defaultParallelism.toLong
+      else sc.getConf.getInt("spark.executor.cores", 1).toLong
+    val exchangeFirst =
+      exchangeFirstRegime(nNodes, stateBytes, concurrency,
+        executorAggBudgetBytes(sc))
+    // In the exchange-first regime, size that exchange from the
+    // MEASURED blob volume (the q112 convention): at the session
+    // default the per-task slice (edge×blob / partitions) left the
+    // 30× run flaky-OOM under concurrent page allocation; ~256 MB
+    // of register payload per task is spill-safe.
+    val exchangeParts =
+      if (!exchangeFirst) 0
+      else {
+        val vol = nEdges * (stateBytes / 2 + 64)
+        math.max(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+          math.min(16L * concurrency, vol / (512L << 20) + 1).toInt)
       }
-      Checkpoints.drop(e) // all hops materialized; the edge copy is dead
-      b.select(col("id"), expr("hll_sketch_estimate(_sk)").as("est_reach"))
-    } finally spark.conf.set(threshKey, prevThresh)
+    for (_ <- 2 to hops) {
+      val joined = hopEdges.join(b, col("id") === col("_dst"))
+      val fromNbrs =
+        (if (exchangeFirst) joined.repartition(exchangeParts, col("_src"))
+         else joined)
+          .groupBy(col("_src"))
+          .agg(expr("hll_union_agg(_sk)").as("_nb"))
+          .withColumnRenamed("_src", "id")
+      val nextB = Checkpoints.serialized(
+        b.join(fromNbrs, Seq("id"), "left_outer")
+          .select(col("id"),
+            when(col("_nb").isNull, col("_sk"))
+              .otherwise(expr("hll_union(_sk, _nb)")).as("_sk")))
+      Checkpoints.drop(b) // superseded hop — release register blobs
+      b = nextB
+    }
+    Checkpoints.drop(e) // all hops materialized; the edge copy is dead
+    ColumnBridge.rebind(spark, b)
+      .select(col("id"), expr("hll_sketch_estimate(_sk)").as("est_reach"))
   }
 
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,

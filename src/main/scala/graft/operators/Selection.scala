@@ -89,9 +89,10 @@ object Selection {
     * diverse remainder.
     *
     * The drop count per cluster is exact integer arithmetic
-    * (`n_members * dropNum / dropDen`, floored), and the cosine is
-    * the same sequential double fold as the assignment itself — both
-    * replayable by any engine, so the pruned set is deterministic.
+    * (`n_members * dropNum / dropDen`, floored), and the cosine is the
+    * one the assignment computed (bit-identical to
+    * [[graft.functions.VectorFunctions.cosine]]) — both replayable by
+    * any engine, so the pruned set is deterministic.
     *
     * Scale: the assignment is the IVF centroid scorer
     * ([[Similarity.rankCentroids]] — one broadcast centroid row, never
@@ -106,15 +107,19 @@ object Selection {
     require(dropNum >= 0 && dropDen > 0 && dropNum <= dropDen,
       s"bad drop fraction $dropNum/$dropDen")
     val cents = Similarity.fitCentroids(vecs, idCol, vecCol, nlist, iters)
-    val assigned = Similarity.assignToCentroid(vecs, cents, idCol, vecCol, "_id")
-    val withCent = assigned.join(
-      cents.select(col("centroid_id"), col("_centroid")), Seq("centroid_id"))
-    val sim = graft.functions.VectorFunctions.cosine(col("_cv"), col("_centroid"))
+    // the scorer's nearest (negsim, cid): negsim is the negated cosine,
+    // with a NULL cosine (zero vector) mapped to +MaxValue, so
+    // ascending negsim is cosine desc-nulls-last
+    val best = Similarity.rankCentroids(
+        vecs.select(col(idCol).as("_id"), col(vecCol).as("_cv")),
+        cents, "_cv", 1, "_best")
+      .select(col("_id"), element_at(col("_best"), 1).as("_b"))
+      .select(col("_id"), col("_b.cid").as("centroid_id"),
+        col("_b.negsim").as("_negsim"))
     val w = Window.partitionBy(col("centroid_id"))
-      .orderBy(desc_nulls_last("_sim"), asc("_id"))
+      .orderBy(asc("_negsim"), asc("_id"))
     val wAll = Window.partitionBy(col("centroid_id"))
-    withCent
-      .withColumn("_sim", sim)
+    best
       .withColumn("proto_rank", row_number().over(w).cast(IntegerType))
       .withColumn("_n", count(lit(1)).over(wAll))
       // integer DIV, not `/`: Spark's `/` on integer operands is double

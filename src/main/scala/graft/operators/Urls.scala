@@ -342,35 +342,27 @@ object Urls {
     * (idCol, host, path, allowed, rule_type, rule_path) with null rule
     * columns when nothing matched.
     *
-    * Scale: the effective-rules frame is robots-corpus-bounded; it
-    * BROADCASTS only while its cardinality is within
-    * `broadcastMaxRules` (the Coverage guard convention — a full-web
-    * crawl carries rules for tens of millions of hosts, and an
-    * unguarded broadcast there is a driver OOM), falling back to a
-    * host-keyed shuffled join past the guard. The cardinality comes
-    * from `rulesCountHint` when the caller already knows it (or a
-    * cheap upper bound — the hint only picks broadcast vs shuffle,
-    * never correctness), making plan construction side-effect-free;
-    * without a hint ONE count action runs per call (the honest price
-    * of an exact guard — callers composing several decisions over one
-    * rules corpus should hint). The URL side is one scan projected to
-    * (id, host, path); the decision is the join + one id-keyed max_by.
+    * Scale: the effective-rules frame is robots-corpus-bounded and
+    * joins on host with no hint: Catalyst broadcasts it while its
+    * estimate fits the broadcast threshold, AQE converts the join at
+    * run time when the measured side does, and a full-web rules corpus
+    * (tens of millions of hosts) gets a host-keyed shuffled join.
+    * Building the plan runs no Spark job. The URL side is one scan
+    * projected to (id, host, path); the decision is the join + one
+    * id-keyed max_by.
     * Wildcard rules compile per matched row (RLike on a non-foldable
     * pattern) — bounded by rules-per-host, not corpus size.
     */
   def robotsFilter(urls: DataFrame, idCol: String, urlCol: String,
       robots: DataFrame, domainCol: String, txtCol: String,
-      agent: String = "*", broadcastMaxRules: Long = 2000000L,
-      rulesCountHint: Option[Long] = None): DataFrame = {
+      agent: String = "*"): DataFrame = {
     val (host, _) = hostPort(col(urlCol))
     val parsed = urls.select(col(idCol).as("_id"), host.as("host"),
         pathOf(col(urlCol)).as("path"))
     val rules = robotsRules(robots, domainCol, txtCol, agent)
       .withColumnRenamed(domainCol, "host")
       .withColumn("_pat", wildcardPattern(col("rule_path")))
-    val nRules = rulesCountHint.getOrElse(rules.count())
-    val rhs = if (nRules <= broadcastMaxRules) broadcast(rules) else rules
-    val matched = parsed.join(rhs, Seq("host"))
+    val matched = parsed.join(rules, Seq("host"))
       .filter(regexp_like(col("path"), col("_pat")))
       .groupBy(col("_id"))
       // longest rule wins; at equal length allow beats disallow; at
@@ -531,28 +523,23 @@ object Urls {
     * deterministic arrival order) and fetch_offset_ms =
     * (fetch_seq − 1) · delay·1000 (LONG millis, exact integer from
     * the decimal seconds). Hosts without a delay row use
-    * `defaultDelaySec`. One host-keyed rank window + one broadcast
-    * join of the delay table: the schedule for a 100 TB frontier is
-    * embarrassingly host-parallel. `delaysCountHint` = the caller's
-    * known delay-table cardinality (or upper bound) — supplying it
-    * makes plan construction side-effect-free; without it ONE count
-    * action runs (the robotsFilter hint convention).
+    * `defaultDelaySec`. One host-keyed rank window + one unhinted
+    * join of the delay table, sized by the planner (the
+    * [[robotsFilter]] convention): when both sides already sit
+    * hash-partitioned on host, as the window and [[crawlDelays]] leave
+    * them, it is a sort-merge join with no exchange of its own. The
+    * schedule for a 100 TB frontier is embarrassingly host-parallel,
+    * and building the plan runs no Spark job.
     */
   def politenessSchedule(urls: DataFrame, idCol: String, urlCol: String,
       delays: DataFrame, domainCol: String,
-      defaultDelaySec: Double = 1.0,
-      broadcastMaxDelays: Long = 2000000L,
-      delaysCountHint: Option[Long] = None): DataFrame = {
+      defaultDelaySec: Double = 1.0): DataFrame = {
     val (host, _) = hostPort(col(urlCol))
     val keyed = urls.select(col(idCol).as("_id"), host.as("host"))
       .withColumn("fetch_seq", row_number().over(
         Window.partitionBy(col("host")).orderBy(col("_id"))))
-    val d0 = delays.select(col(domainCol).as("host"),
+    val d = delays.select(col(domainCol).as("host"),
       col("crawl_delay_sec"))
-    // same cardinality guard as robotsFilter: a full-web delay table
-    // is host-count-sized
-    val nDelays = delaysCountHint.getOrElse(d0.count())
-    val d = if (nDelays <= broadcastMaxDelays) broadcast(d0) else d0
     keyed.join(d, Seq("host"), "left")
       .select(col("_id").as(idCol), col("host"), col("fetch_seq"),
         ((col("fetch_seq") - 1).cast("long") *

@@ -7373,11 +7373,8 @@ object TrainingData {
     val robots = delayRobotsFixture(s, dir)
     val delays = graft.operators.Urls.crawlDelays(
       robots, "host", "robots_txt", agent = "graftbot")
-    // the delay table is bounded by the robots corpus: hint the guard
-    // with the host count instead of paying a count of the parse
     val sched = graft.operators.Urls.politenessSchedule(
-      log, "page_id", "url", delays, "host",
-      delaysCountHint = Some(robots.count()))
+      log, "page_id", "url", delays, "host")
     graft.operators.Sampling.rendezvousAssign(sched, "host",
         Seq("cr-a", "cr-b", "cr-c", "cr-d"))
       .select(col("page_id"), col("host"), col("shard"),
@@ -8308,13 +8305,8 @@ object TrainingData {
       .select(concat(lit("www."), col("source"), lit(".example.com"))
           .as("host"),
         lit("User-agent: *\nDisallow: /private\n").as("robots_txt"))
-    // exactly one Disallow rule per host by construction: hint the
-    // broadcast guard with the host count (a cheap distinct count)
-    // instead of letting robotsFilter run the full robots parse once
-    // more for an exact cardinality
     val allowedIds = graft.operators.Urls.robotsFilter(
-        fetched, "page_id", "url", robots, "host", "robots_txt",
-        rulesCountHint = Some(robots.count()))
+        fetched, "page_id", "url", robots, "host", "robots_txt")
       .filter(col("allowed")).select(col("page_id"))
     val crawlable = fetched.join(allowedIds, Seq("page_id"))
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Column ↔ Expression bridge.
+/** Column ↔ Expression and session bridge.
   *
   * Spark 4 unified `Column` around ColumnNode and made the conversion
   * helpers `private[sql]`; extension libraries conventionally reach
@@ -33,4 +33,22 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A clone of `spark` — same SparkContext, shared state and session
+    * state at clone time — with `overrides` set on the clone's conf
+    * only, for the few settings that have no plan-level device.
+    */
+  def isolatedSession(spark: org.apache.spark.sql.SparkSession,
+      overrides: Map[String, String]): org.apache.spark.sql.SparkSession = {
+    val clone = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+    overrides.foreach { case (k, v) => clone.conf.set(k, v) }
+    clone
+  }
+
+  /** `df`'s analyzed plan as a DataFrame of `spark`: moves a
+    * checkpointed frame between sessions without touching its rows.
+    */
+  def rebind(spark: org.apache.spark.sql.SparkSession,
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    ofRows(spark, df.queryExecution.analyzed)
 }

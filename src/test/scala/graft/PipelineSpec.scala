@@ -41,12 +41,11 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("broadcast geocode guard: over-threshold dim falls back to a shuffle join") {
-    // an outsized dimension must NOT be force-broadcast: the explicit
-    // hint overrides autoBroadcastJoinThreshold, so the guard drops the
-    // hint when the dim's estimated size exceeds the threshold. With
-    // the hint gone (and the threshold too small for auto-broadcast),
-    // the plan contains no BroadcastExchange — and results are
-    // identical to the broadcast path.
+    // an outsized dimension must NOT be force-broadcast: the join
+    // carries no hint, so once the dim's estimated size exceeds the
+    // threshold the planner picks a shuffle join — the plan contains
+    // no BroadcastExchange, and results are identical to the broadcast
+    // path.
     val lookup = spark.createDataFrame(
       java.util.List.of(
         Row(34.05, -118.24, "Los Angeles", "Los Angeles"),

@@ -271,6 +271,17 @@ class PlanShapeSpec extends SparkSpec {
     assert(bad.isEmpty, s"dim side not broadcast in: ${bad.mkString(", ")}")
   }
 
+  test("q71's final plan still broadcasts the geocode dimension") {
+    // the enrichment join carries no hint: the planner alone must keep
+    // the small dimension on the broadcast side of the left join
+    val df = SparkEntry.queries("q71_geocode_enrich")(spark, sfDir)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("isFinalPlan=true"), p)
+    assert(p.contains("BroadcastHashJoin") && p.contains("LeftOuter, BuildRight"),
+      s"geocode dimension not broadcast:\n$p")
+  }
+
   test("bucketed join: sort-merge with no exchange keyed on the join key") {
     // the whole point of the bucketed layout: the join consumes bucket
     // files directly — a shuffle on the join key means the layout was

@@ -75,7 +75,8 @@ class TablesSpec extends SparkSpec {
   test("building a read-path query starts no Spark job") {
     // the etl-readpath workload's queries, five fixture-only
     // Relational/Geo ones, the geo queries with derived station/fence
-    // sets, and the IVF queries whose centroids ride a broadcast row
+    // sets, the IVF queries whose centroids ride a broadcast row, and
+    // the crawl queries whose rules/delay joins the planner sizes
     val names = Seq(
       "q01_pricing_summary", "q02_filter_project", "q03_shipping_priority",
       "q04_order_priority", "q05_local_supplier", "q06_revenue_filter",
@@ -89,7 +90,8 @@ class TablesSpec extends SparkSpec {
       "q62_grouping_sets", "q202_unpivot", "q116_trajectory_stats",
       "q127_trajectory_similarity", "q130_resample_tracks",
       "q128_winsorize", "q118_nearest_station", "q121_geofence_episodes",
-      "q124_geofence_alerts", "q235b_bitext_ivf", "q238b_hard_negatives_ivf")
+      "q124_geofence_alerts", "q235b_bitext_ivf", "q238b_hard_negatives_ivf",
+      "q250_robots_filter", "q257_crawl_delay_schedule")
     names.foreach { n =>
       val jobs = SparkEvents.capture(spark)(SparkEntry.queries(n)(spark, sfDir): Unit).jobs
       assert(jobs.isEmpty, s"$n built with jobs: $jobs")

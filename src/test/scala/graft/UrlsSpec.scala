@@ -250,37 +250,31 @@ class UrlsSpec extends SparkSpec {
     assert(rev.forall(_ == Map(1L -> (false, "/*b"))))
   }
 
-  test("rules past broadcastMaxRules fall back to a shuffled join, same answer") {
-    val txt = "User-agent: *\nDisallow: /private\nAllow: /private/ok\n"
-    val urls = Seq(1L -> "https://h.com/private/x",
-      2L -> "https://h.com/private/ok/y", 3L -> "https://h.com/pub")
-    val us = StructType(Seq(StructField("id", LongType),
-      StructField("url", StringType)))
-    val u = spark.createDataFrame(
-      new java.util.ArrayList[Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(
-          urls.toList.map { case (i, p) => Row(i, p) }).asJava), us)
-    def run(maxRules: Long) =
-      Urls.robotsFilter(u, "id", "url", robotsFixture(txt), "host", "txt",
-        broadcastMaxRules = maxRules)
-    // auto-broadcast off: only the explicit hint can broadcast, so the
-    // plan shape reflects the guard's decision (at real scale the
-    // stats-based auto path would not fire either)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val guarded = run(1L) // 2 rules > 1 → shuffled path
-      val plan = guarded.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin"),
-        s"rules side still broadcast past the guard:\n$plan")
-      val hinted = run(2000000L)
-      assert(hinted.queryExecution.executedPlan.toString
-        .contains("BroadcastHashJoin"),
-        "under-guard rules side lost its broadcast hint")
-      val a = hinted.collect().map(_.toSeq).toSet
-      val b = guarded.collect().map(_.toSeq).toSet
-      assert(a == b)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  test("robotsFilter and politenessSchedule: shuffled joins give the broadcast answer") {
+    val txt = "User-agent: *\nDisallow: /private\nAllow: /private/ok\nCrawl-delay: 2\n"
+    val u = urlFrame(1L -> "https://h.com/private/x",
+      2L -> "https://h.com/private/ok/y", 3L -> "https://h.com/pub",
+      4L -> "https://other.com/private/z")
+    def run() = (
+      Urls.robotsFilter(u, "id", "url", robotsFixture(txt), "host", "txt"),
+      Urls.politenessSchedule(u, "id", "url",
+        Urls.crawlDelays(robotsFixture(txt), "host", "txt"), "host"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val (filt, sched) = run()
+    assert(filt.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+      "the small rules side is not broadcast by default")
+    val (bFilt, bSched) = (rows(filt), rows(sched))
+    withoutBroadcast {
+      val (sFilt, sSched) = run()
+      Seq(sFilt, sSched).foreach { df =>
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("BroadcastHashJoin"), s"still broadcast:\n$plan")
+      }
+      assert(rows(sFilt) == bFilt)
+      assert(rows(sSched) == bSched)
+    }
+    assert(bFilt.map(r => r(0) -> r(3)) ==
+      Set(1L -> false, 2L -> true, 3L -> true, 4L -> true))
   }
 
   test("resolveUrl: every RFC 3986 reference class against one base") {
@@ -421,8 +415,7 @@ class UrlsSpec extends SparkSpec {
       (None, Some(day("2026-05-29")), false))
   }
 
-  test("broadcast guards: a cardinality hint makes plan construction " +
-      "action-free; the fallback counts exactly once") {
+  test("unhinted robotsFilter / politenessSchedule build with 0 actions") {
     val execs = new java.util.concurrent.atomic.AtomicInteger(0)
     val ql = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -446,19 +439,13 @@ class UrlsSpec extends SparkSpec {
       2L -> "https://h.com/a")
     spark.listenerManager.register(ql)
     try {
-      Urls.robotsFilter(u, "id", "url", robotsFixture(txt), "host",
-        "txt", rulesCountHint = Some(1L))
+      Urls.robotsFilter(u, "id", "url", robotsFixture(txt), "host", "txt")
         .queryExecution.executedPlan
       Urls.politenessSchedule(u, "id", "url",
-        Urls.crawlDelays(robotsFixture(txt), "host", "txt"), "host",
-        delaysCountHint = Some(1L))
+        Urls.crawlDelays(robotsFixture(txt), "host", "txt"), "host")
         .queryExecution.executedPlan
       assert(settle() == 0,
-        s"hinted guard ran ${execs.get()} action(s) at plan build")
-      execs.set(0)
-      Urls.robotsFilter(u, "id", "url", robotsFixture(txt), "host", "txt")
-      assert(settle() == 1,
-        s"fallback guard ran ${execs.get()} actions, expected one count")
+        s"plan construction ran ${execs.get()} action(s)")
     } finally spark.listenerManager.unregister(ql)
   }
 
@@ -486,6 +473,21 @@ class UrlsSpec extends SparkSpec {
   }
 
   // ---- frontier index ----
+
+  /** Runs `body` with both broadcast thresholds (static and AQE) off,
+    * so every unhinted join plans as a shuffle join.
+    */
+  private def withoutBroadcast[T](body: => T): T = {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "-1"))
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   private def urlFrame(rows: (Long, String)*) = {
     val schema = StructType(Seq(StructField("id", LongType),
