@@ -8,16 +8,21 @@ import org.apache.spark.sql.functions.{array, element_at, transform}
   *
   * Plain `Column` composition is tree substitution — every reference
   * to a `val` holding a Column COPIES the whole subtree into the final
-  * expression. For the row-local operator chains here (URL
-  * canonicalization, markup extraction) that nesting is
-  * multiplicative: canonicalize's pct-normalized query string appeared
-  * 5 times, each copy carrying its own split machinery (~25 instances
-  * of the query regexp in one canonicalize call), and
-  * `Markup.extractText`'s kept-blocks array re-instantiated the whole
-  * strip-chain per struct field. The analyzer and optimizer walk every
-  * copy (a measured multi-second fixed cost per canonicalize-heavy
-  * plan — BENCH_NOTES R14.3), and the evaluator computes every copy
-  * per row.
+  * expression. For the row-local operator chains here (markup
+  * extraction, quality scores, curation verdicts) that nesting is
+  * multiplicative: `Markup.extractText`'s kept-blocks array
+  * re-instantiated the whole strip-chain per struct field. The
+  * analyzer and optimizer walk every copy (a measured multi-second
+  * fixed cost per plan — BENCH_NOTES R14.3), and the evaluator computes
+  * every copy per row.
+  *
+  * A binding only deduplicates; the tree still holds lambdas, which
+  * keep the projection out of whole-stage codegen. Where a chain is
+  * large and hot, one native expression is the next step: URL
+  * canonicalization was Bind's first user (its pct-normalized query
+  * string had appeared 5 times per call) and is now
+  * [[graft.expressions.CanonicalizeUrlExpression]], 2,221 nodes
+  * collapsed into one.
   *
   * [[Bind.once]] wraps the expression in a single-element array and
   * hands the body a LAMBDA VARIABLE — a leaf — so the tree holds one

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
   *      the point)
   *   6. empty path normalized to `/`
   *   7. percent-encodings in path and query normalized per RFC 3986
-  *      §6.2.2 ([[pctNormalize]]): uppercase hex, unreserved
+  *      §6.2.2: uppercase hex, unreserved
   *      characters decoded, malformed escapes left alone
   *
   * Scope (documented, not silent): no userinfo handling beyond
@@ -36,11 +36,14 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
   * public suffixes ([[multiPartSuffixes]]) — a full PSL is a data
   * file, not an algorithm change.
   *
-  * Everything is a ROW-LOCAL projection of native regexp/array
-  * expressions in the Java ∩ RE2 subset — zero exchanges, zero UDFs;
-  * a 100 TB canonicalization is scan → project → write at input
-  * parallelism, and the downstream frontier dedup keys on the
-  * canonical string.
+  * [[canonicalize]] is ONE row-local native expression,
+  * [[graft.expressions.CanonicalizeUrlExpression]], codegen'd inside the
+  * projection's stage — zero exchanges, zero UDFs, a two-node tree for
+  * the analyzer; a 100 TB canonicalization is scan → project → write at
+  * input parallelism, and the downstream frontier dedup keys on the
+  * canonical string. The robots, politeness and link-resolve parsers
+  * below stay projections of native regexp/array expressions in the
+  * Java ∩ RE2 subset.
   */
 object Urls {
 
@@ -78,126 +81,13 @@ object Urls {
     when(p === "", lit("/")).otherwise(p)
   }
 
-  private def queryOf(url: Column): Column =
-    regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.-]*://[^?#]*\\?([^#]*)", 1)
-
-  /** RFC 3986 §6.2.2 percent-encoding normalization of a path or
-    * query string: valid `%XX` escapes get UPPERCASE hex
-    * (`%2f` → `%2F`) and escapes of UNRESERVED characters
-    * (ALPHA / DIGIT / `-._~`) DECODE (`%41` → `A`, `%7e` → `~`) —
-    * without this, `%7Euser` and `~user` are two frontier entries for
-    * one page. Invalid sequences (`%zz`, a lone trailing `%`) pass
-    * through untouched — the leave-it-alone rule for malformed
-    * escapes. Decoding an unreserved character can never create a
-    * URL delimiter (`&`, `=`, `/`, `#` are all reserved and stay
-    * encoded), so normalizing BEFORE the query splits into params is
-    * safe.
-    *
-    * Implementation is one split-on-% plus a row-local transform; the
-    * hex value comes from digit positions in a literal table and the
-    * decoded character from a printable-ASCII lookup string — pure
-    * cross-engine arithmetic, no chr()/conv() dialect drift. Zero
-    * exchanges.
-    */
-  private[graft] def pctNormalize(s0: Column): Column = bind(s0) { s =>
-    val printable = (32 to 126).map(_.toChar).mkString
-    // hex-digit value from codepoint arithmetic (ascii of the
-    // uppercased char; -1 = not a hex digit) — a compact expression
-    // tree matters here: this lambda inlines several times per
-    // canonicalize, and an earlier array-lookup formulation measurably
-    // inflated plan compile time on canonicalize-heavy queries
-    def hexVal(ch: Column): Column = {
-      val a = ascii(ch)
-      when(a >= 48 && a <= 57, a - 48)
-        .when(a >= 65 && a <= 70, a - 55)
-        .otherwise(lit(-1))
-    }
-    // fast path: most URLs carry no '%' at all — CaseWhen evaluates
-    // branches lazily per row, so the split/transform machinery (bound
-    // once; the tree used to copy the split per reference) only runs
-    // on rows that actually contain an escape
-    when(s.contains("%"), bind(split(s, "%", -1)) { parts =>
-      val fixed = transform(
-        slice(parts, lit(2), greatest(size(parts) - 1, lit(0))), { p =>
-          val d1 = upper(p.substr(lit(1), lit(1)))
-          val d2 = upper(p.substr(lit(2), lit(1)))
-          val n1 = hexVal(d1)
-          val n2 = hexVal(d2)
-          val n = (n1 * 16 + n2).cast(IntegerType)
-          val valid = n1 >= 0 && n2 >= 0
-          val decoded = lit(printable).substr(n - 31, lit(1))
-          val rest = p.substr(lit(3), length(p))
-          // n >= 45 ('-', the smallest unreserved code) keeps the
-          // substr position strictly positive: a negative position
-          // counts from the END of the lookup string, which would make
-          // a control-char escape like %1E masquerade as '~'
-          when(valid && n >= 45 && decoded.rlike("^[A-Za-z0-9._~-]$"),
-            concat(decoded, rest))
-            .when(valid, concat(lit("%"), d1, d2, rest))
-            .otherwise(concat(lit("%"), p))
-        })
-      concat(element_at(parts, 1), array_join(fixed, ""))
-    }).otherwise(s)
-  }
-
-  /** Query params surviving the tracking filter, sorted. */
-  private def keptParams(query: Column): Column = {
-    val raw = filter(split(query, "&"), p => length(p) > 0)
-    val kept = filter(raw, { p =>
-      val key = lower(substring_index(p, "=", 1))
-      !key.startsWith("utm_") && !key.isin(trackingKeys: _*)
-    })
-    array_sort(kept)
-  }
-
   /** Canonicalize `url` into a struct:
     *   - `canonical_url` (null when the input has no scheme — not a URL)
     *   - `host`, `registrable_domain`
     *   - `n_params_dropped` (tracking params removed)
     */
-  def canonicalize(url: Column): Column = {
-    // Each struct field is an INDEPENDENT compact expression (shared
-    // work deduplicated per field via [[bind]], nothing shared across
-    // fields): `getField` on the result then prunes to exactly the
-    // fields a consumer reads (SimplifyExtractValueOps), while a
-    // consumer keeping the whole struct evaluates each field once.
-    val (host, port) = hostPort(url)
-    val canon = bind(struct(schemeOf(url).as("s"), host.as("h"),
-        port.as("p"), pctNormalize(pathOf(url)).as("pa"),
-        pctNormalize(queryOf(url)).as("q"))) { t =>
-      val scheme = t.getField("s")
-      val prt = t.getField("p")
-      val defaultPort = (scheme === "http" && prt === "80") ||
-        (scheme === "https" && prt === "443")
-      val portPart = when(prt === "" || defaultPort, lit(""))
-        .otherwise(concat(lit(":"), prt))
-      val queryPart = bind(keptParams(t.getField("q"))) { kept =>
-        when(size(kept) > 0, concat(lit("?"), array_join(kept, "&")))
-          .otherwise(lit(""))
-      }
-      when(scheme === "", lit(null).cast(StringType))
-        .otherwise(concat(scheme, lit("://"), t.getField("h"), portPart,
-          t.getField("pa"), queryPart))
-    }
-    val registrable = bind(split(host, "\\.")) { labels =>
-      val n = size(labels)
-      val last2 = concat_ws(".",
-        element_at(labels, -2).cast(StringType), element_at(labels, -1))
-      val last3 = concat_ws(".", element_at(labels, -3).cast(StringType),
-        element_at(labels, -2), element_at(labels, -1))
-      when(n >= 3 && last2.isin(multiPartSuffixes: _*), last3)
-        .otherwise(when(n >= 2, last2).otherwise(host))
-    }
-    val nDropped = bind(pctNormalize(queryOf(url))) { query =>
-      (size(filter(split(query, "&"), p => length(p) > 0)) -
-        size(keptParams(query))).cast(IntegerType)
-    }
-    struct(
-      canon.as("canonical_url"),
-      host.as("host"),
-      registrable.as("registrable_domain"),
-      nDropped.as("n_params_dropped"))
-  }
+  def canonicalize(url: Column): Column =
+    graft.expressions.CanonicalizeUrlExpression.canonicalizeUrl(url)
 
   /** Parse robots.txt bodies into per-AGENT-GROUP rule rows and select
     * each domain's EFFECTIVE rules for `agent` (RFC 9309 §2.2.1 / the

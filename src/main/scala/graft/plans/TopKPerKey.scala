@@ -111,12 +111,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object TopKPerKey {
   def topKPerKey(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int): DataFrame = {
     val spark = df.sparkSession
-    // defensive registration for sessions built without GraftExtensions
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy) &&
-        !spark.sessionState.planner.strategies.contains(TopKPerKeyStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    }
+    // the operator reads the session's planner and never changes it
+    if (!spark.sessionState.planner.strategies.contains(TopKPerKeyStrategy))
+      throw new IllegalStateException(
+        "TopKPerKey.topKPerKey needs a session built with GraftExtensions: " +
+          "SparkSession.builder().withExtensions(new graft.plans.GraftExtensions) " +
+          "or spark.sql.extensions=graft.plans.GraftExtensions")
     val sortOrder = order.map { c =>
       ColumnBridge.expression(c) match {
         case so: SortOrder => so

@@ -5724,7 +5724,7 @@ object TrainingData {
     * the parser SQL cannot drift per query.
     */
   /** RFC 3986 §6.2.2 percent normalization in DuckDB's dialect — the
-    * [[graft.operators.Urls.pctNormalize]] replay: split on '%', and
+    * [[graft.expressions.CanonicalizeUrlExpression]] replay: split on '%', and
     * per tail piece uppercase a valid hex pair, decode it when the
     * code is unreserved (digits 48-57, upper 65-90, lower 97-122, and
     * `-._~` = 45/46/95/126), pass malformed escapes through. The hex

@@ -84,4 +84,15 @@ class BenchCliSpec extends SparkSpec {
       assert(persisted(mine.id) && !persisted(its.id))
     } finally mine.unpersist()
   }
+
+  test("the python dev tools print their usage and exit 2 on a bad argument count") {
+    import scala.sys.process._
+    for ((tool, args) <- Seq("tools/validate.py" -> Seq(Nil, Seq("d")),
+        "tools/duck_bench.py" -> Seq(Nil, Seq("d"), Seq("a", "b", "c", "d", "e")));
+        a <- args) {
+      val err = new StringBuilder
+      val code = (Seq("python3", tool) ++ a).!(ProcessLogger(_ => (), l => err.append(l)))
+      assert(code == 2 && err.toString.startsWith("usage: "), s"$tool $a: exit $code, $err")
+    }
+  }
 }

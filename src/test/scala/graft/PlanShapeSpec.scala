@@ -13,6 +13,18 @@ package graft
   * plans built BEFORE checkpointing is reached.
   */
 class PlanShapeSpec extends SparkSpec {
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+
+  /** Every node of an executed plan, through AQE and its query stages. */
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    p +: kids.flatMap(flatten)
+  }
 
   /** Physical-plan string per query, built once. Building a plan is
     * cheap; the handful of eager (checkpointing) operators execute at
@@ -301,17 +313,7 @@ class PlanShapeSpec extends SparkSpec {
     // every text payload through its shuffle. The id-join formulation
     // exchanges (hash, id) pairs only — asserted on the FINAL adaptive
     // plan's shuffle outputs, not the plan string.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }
-      p +: kids.flatMap(flatten)
-    }
     val df = SparkEntry.queries("q18_exact_dedup")(spark, sfDir)
     df.collect() // finalize the AQE plan
     val bad = flatten(df.queryExecution.executedPlan).collect {
@@ -327,17 +329,7 @@ class PlanShapeSpec extends SparkSpec {
     // only. Asserted on the FINAL adaptive plan of q100 — a
     // formulation change that let o_custkey/o_orderstatus cross an
     // exchange would ship the table's full width at 100 TB.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }
-      p +: kids.flatMap(flatten)
-    }
     val df = SparkEntry.queries("q100_snapshot_diff")(spark, sfDir)
     df.collect() // finalize the AQE plan
     val valueCols = Set("o_custkey", "o_orderstatus")
@@ -377,17 +369,7 @@ class PlanShapeSpec extends SparkSpec {
     // n-gram strings die before the exchange — and the document tokens
     // cross exactly one id-keyed exchange (window + reassembly reuse
     // the same partitioning).
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }
-      p +: kids.flatMap(flatten)
-    }
     val df = SparkEntry.queries("q82_passage_scrub")(spark, sfDir)
     df.collect() // finalize the AQE plan
     val shuffles = flatten(df.queryExecution.executedPlan)
@@ -529,5 +511,53 @@ class PlanShapeSpec extends SparkSpec {
       df.queryExecution.executedPlan.toString.contains("*(")
     }
     assert(bad.isEmpty, s"no whole-stage codegen span in: ${bad.mkString(", ")}")
+  }
+
+  test("canonicalize resolves to one expression node over its input") {
+    // the Column composition it replaced resolved to 2,221 nodes for
+    // canonical_url alone, and every Dataset step re-analyzed them
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val analyzed = Seq("https://e.com/").toDF("u")
+      .select(graft.operators.Urls.canonicalize(col("u")).as("c"))
+      .queryExecution.analyzed
+    val nodes = analyzed.expressions.map(_.collect { case e => e }.size).sum
+    assert(nodes <= 3, s"$nodes expression nodes:\n${analyzed.expressions.mkString("\n")}")
+  }
+
+  test("the frontier fetch set canonicalizes inside whole-stage codegen, no HOF") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, GetStructField, HigherOrderFunction}
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, WholeStageCodegenExec}
+    val tmp = java.nio.file.Files.createTempDirectory("graft-fetchset").toString
+    // a range, not a local Seq: a LocalRelation would fold the projection
+    def urls(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id"),
+      concat(lit("HTTPS://H"), (col("id") % 5).cast("string"), lit(".example.com/p/"),
+        col("id").cast("string"), lit("?utm_source=x")).as("url"))
+    graft.operators.Urls.writeFrontierIndex(urls(0, 20), "url", tmp)
+    val fetch = graft.operators.Urls.frontierFetchSet(spark, tmp, urls(10, 30), "id", "url")
+    assert(fetch.collect().length == 10) // finalize THIS df's AQE plan
+    val nodes = flatten(fetch.queryExecution.executedPlan)
+    def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case other => other.children.flatMap(stage)
+    })
+    val fused = nodes.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+    val canon = nodes.collect {
+      case p: ProjectExec if p.projectList.exists {
+        // computed here, not read back out of the aggregate's struct
+        case a: Alias => a.name == "canonical_url" && !(a.child match {
+          case _: Attribute | GetStructField(_: Attribute, _, _) => true
+          case _ => false
+        })
+        case _ => false
+      } => p
+    }
+    assert(canon.nonEmpty, fetch.queryExecution.executedPlan.toString)
+    for (p <- canon) {
+      assert(fused.exists(_ eq p), s"canonicalizing Project outside whole-stage codegen:\n$p")
+      assert(!p.projectList.exists(_.exists(_.isInstanceOf[HigherOrderFunction])),
+        s"higher-order function in the canonicalizing Project:\n$p")
+    }
   }
 }

@@ -8,6 +8,8 @@ object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
+      // as GraftSession.builder: TopKPerKey requires its planner strategy
+      .withExtensions(new graft.plans.GraftExtensions)
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

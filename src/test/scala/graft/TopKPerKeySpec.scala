@@ -72,4 +72,19 @@ class TopKPerKeySpec extends SparkSpec {
       Seq(col("l_suppkey")), Seq(col("l_extendedprice").desc, col("l_orderkey").asc, col("l_linenumber").asc), 2)
     assert(plan.count() > 0)
   }
+
+  test("topKPerKey refuses a session without GraftExtensions and leaves its planner alone") {
+    import org.apache.spark.sql.SparkSession
+    val bare = SparkSession.builder().create() // no extensions, shared context
+    try {
+      val df = bare.range(3).toDF("k")
+      val e = intercept[IllegalStateException](
+        TopKPerKey.topKPerKey(df, Seq(col("k")), Seq(col("k")), 1))
+      assert(e.getMessage.contains("GraftExtensions"), e.getMessage)
+      assert(bare.experimental.extraStrategies.isEmpty)
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+  }
 }

@@ -38,4 +38,8 @@ def main(sf_dir, oracle_path, out_path=None, skip=""):
 
 
 if __name__ == "__main__":
+    if not 3 <= len(sys.argv) <= 5:
+        print("usage: duck_bench.py <sfDir> <oracle_sql.json> [out.json] "
+              "[skip1,skip2,...]", file=sys.stderr)
+        sys.exit(2)
     main(*sys.argv[1:])

@@ -80,4 +80,7 @@ def main(sf_dir: str, out_dir: str):
     sys.exit(1 if n_fail else 0)
 
 if __name__ == "__main__":
+    if len(sys.argv) != 3:
+        print("usage: validate.py <sfDir> <outDir>", file=sys.stderr)
+        sys.exit(2)
     main(sys.argv[1], sys.argv[2])
