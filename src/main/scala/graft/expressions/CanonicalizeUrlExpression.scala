@@ -205,4 +205,11 @@ object CanonicalizeUrlExpression {
   /** Column-level API. */
   def canonicalizeUrl(url: Column): Column =
     ColumnBridge.column(CanonicalizeUrlExpression(ColumnBridge.expression(url)))
+
+  /** True exactly when `canonical_url` of `url` is non-null: `url` is
+    * non-null and starts with a scheme (`schemeP`, the pattern
+    * [[compute]] reads the scheme with). A filter on it reads the input,
+    * so the URL is canonicalized once, in the projection.
+    */
+  def isUrl(url: Column): Column = url.isNotNull && url.rlike(schemeP.pattern)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.expressions.ShingleSetExpression
 import graft.plans.Checkpoints
 
 /** A near-dup pair result plus the number of degenerate (over-cap)
@@ -42,9 +43,6 @@ object Dedup {
     df.groupBy(df.columns.map(col).toSeq: _*)
       .agg(count(lit(1)).as("duplicate_count"))
       .filter(col("duplicate_count") > 1)
-
-  /** D1 remediation: drop exact duplicate rows. */
-  def dropExactDuplicates(df: DataFrame): DataFrame = df.dropDuplicates()
 
   /** Exact content dedup by fingerprint: keep the lowest-id row per
     * normalized-content hash.
@@ -96,12 +94,6 @@ object Dedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Content-hash duplicate groups: md5 fingerprint → group sizes > 1. */
-  def fingerprintGroups(df: DataFrame, contentCol: String): DataFrame =
-    df.groupBy(md5(col(contentCol)).as("fingerprint"))
-      .agg(count(lit(1)).as("n_copies"))
-      .filter(col("n_copies") > 1)
-
   // -------------------------------------------------------------------
   // Near-duplicate detection (north-star training-data operators)
   // -------------------------------------------------------------------
@@ -132,23 +124,30 @@ object Dedup {
 
   /** The signature projection: (`_id`, sorted distinct shingle set
     * `_sh`, MinHash `_sig`, LSH band keys `_bands`) per doc with at
-    * least one shingle. One projection and filter per row: no shuffle,
-    * no persist, no job — callers choose the partitioning (the batch
-    * operators widen first, the per-increment paths do not) and own
-    * any persist.
+    * least one shingle. One filter on the input text and one projection
+    * per row: no shuffle, no persist, no job — callers choose the
+    * partitioning (the batch operators widen first, the per-increment
+    * paths do not) and own any persist.
+    *
+    * All three columns are native expressions, so the projection runs
+    * in one whole-stage-codegen stage. The filter tests the text
+    * ([[graft.expressions.ShingleSetExpression.hasShingles]]), not
+    * `size(_sh) > 0`: the optimizer pushes a filter on `_sh` below the
+    * projection with the alias substituted, which shingles every row
+    * twice.
     */
   private[graft] def sign(
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
-    df.select(
+    df.filter(ShingleSetExpression.hasShingles(col(textCol), shingleSize))
+      .select(
         col(idCol).as("_id"),
         // sorted ONCE per doc so pairwise verification can use the
         // alloc-free merge-walk intersection (SortedOverlapExpression)
         // instead of a hash-set array_intersect per candidate pair
-        array_sort(array_distinct(charNGrams(col(textCol), shingleSize))).as("_sh"))
-      .filter(size(col("_sh")) > 0)
+        ShingleSetExpression.shingleSet(col(textCol), shingleSize).as("_sh"))
       // codegen signature expression (parity proven in
       // MinHashExpressionSpec): one generated loop instead of
       // k×|shingles| interpreted HOF evaluations. The signature is
@@ -1081,11 +1080,9 @@ object Dedup {
     // plan reads it from BOTH the candidate and verification branches
     def prep(df: DataFrame, id: String, text: String, outId: String) =
       graft.sources.Tables.widen(df)
+        .filter(ShingleSetExpression.hasShingles(col(text), shingleSize))
         .select(col(id).as(outId),
-          array_sort(array_distinct(
-            graft.functions.TextFunctions.charNGrams(col(text), shingleSize)))
-            .as("_sh"))
-        .filter(size(col("_sh")) > 0)
+          ShingleSetExpression.shingleSet(col(text), shingleSize).as("_sh"))
         .withColumn("_sig", graft.expressions.MinHashSignatureExpression
           .minhashSignatureNative(col("_sh"), numHashes))
         .withColumn("_bands", graft.expressions.BandKeysExpression
@@ -1189,11 +1186,11 @@ object Dedup {
     // branches → persist for the operator's lifetime (same lifecycle
     // contract as the LSH operators above)
     val sh = graft.sources.Tables.widen(df)
+      .filter(ShingleSetExpression.hasShingles(col(textCol), shingleSize))
       .select(col(idCol).as("_id"),
         array_sort(array_distinct(transform(
           graft.functions.TextFunctions.charNGrams(col(textCol), shingleSize),
           g => graft.functions.TextFunctions.md5Hash60(g)))).as("_sh"))
-      .filter(size(col("_sh")) > 0)
       .withColumn("_n", size(col("_sh")).cast(LongType))
       .persist()
     try {

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
 
+import graft.expressions.CanonicalizeUrlExpression.isUrl
+
 /** URL canonicalization for crawl pipelines: the frontier-dedup /
   * per-domain-budget step every web corpus runs before anything else —
   * the same page arrives as `HTTP://Example.COM:80/a?utm_source=x&b=2&a=1#top`
@@ -555,8 +557,12 @@ object Urls {
       .withColumn("_h",
         graft.functions.TextFunctions.md5Hash60(col("canonical_url")))
 
+  /** Filters on `isUrl(url)`, not `canonical_url IS NOT NULL`: the
+    * optimizer pushes a filter on `canonical_url` below the projection
+    * with the alias substituted, which canonicalizes every row twice.
+    */
   private def canonicalHashes(urls: DataFrame, urlCol: String) =
-    canonical(urls, urlCol).filter(col("canonical_url").isNotNull)
+    canonical(urls.filter(isUrl(col(urlCol))), urlCol)
       .select(col("_h").as("h")).distinct()
 
   /** Manifest handshake: fail fast on an index of another kind. */
@@ -699,7 +705,7 @@ object Urls {
     val indexed = indexedHashes(spark, path).select(col("h").as("_h"))
       .distinct()
       .withColumn("_inx", lit(true))
-    val first = canon.filter(col("canonical_url").isNotNull)
+    val first = canonical(urls.filter(isUrl(col(urlCol))), urlCol, col(idCol).as("_id"))
       .groupBy(col("_h")).agg(min(col("_id")).as("_fid"))
     canon.join(indexed, Seq("_h"), "left")
       .join(first, Seq("_h"), "left")
@@ -722,8 +728,8 @@ object Urls {
   private[graft] def frontierFetchSet(spark: org.apache.spark.sql.SparkSession,
       path: String, urls: DataFrame, idCol: String, urlCol: String): DataFrame = {
     requireFrontier(spark, path)
-    canonical(urls, urlCol, col(idCol), col(urlCol))
-      .filter(col("canonical_url").isNotNull && col(idCol).isNotNull)
+    canonical(urls.filter(isUrl(col(urlCol)) && col(idCol).isNotNull),
+        urlCol, col(idCol), col(urlCol))
       .groupBy(col("_h"))
       .agg(min(struct(col(idCol), col(urlCol), col("canonical_url"))).as("_f"))
       .join(indexedHashes(spark, path).select(col("h").as("_h")), Seq("_h"),

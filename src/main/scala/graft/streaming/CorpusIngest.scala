@@ -46,7 +46,10 @@ import graft.operators.Dedup
   *
   * Scale: ONE signature pass per batch. The batch's shingle sets,
   * signatures and band keys are computed once, unwidened, and serve
-  * the probe, its verification and the survivors' index rows. The
+  * the probe, its verification and the survivors' index rows. Each
+  * row is shingled once, by one native expression inside a generated
+  * stage ([[graft.expressions.ShingleSetExpression]]): the pass
+  * filters on the text's length, not on the shingle set. The
   * probe reads the index through `Tables.read` (no footer-inference
   * job) and aggregates only the index band rows whose key the batch
   * holds. The survivor count rides the survivors' checkpoint as an

@@ -44,6 +44,18 @@ class IngestSpec extends SparkSpec {
     assert(rows.map(_.getAs[Long]("length")).sorted.toSeq == Seq(2L, 4L))
   }
 
+  test("S4: relational-store scan reads the parquet twin, or a JDBC URL through the jdbc source") {
+    val viaParquet = Ingest.jdbcOrParquet(spark, None, "nation", sfDir)
+    val direct = graft.sources.Tables.nation(spark, sfDir)
+    assert(viaParquet.schema == direct.schema)
+    assert(viaParquet.exceptAll(direct).isEmpty && direct.exceptAll(viaParquet).isEmpty)
+    // no JDBC driver ships with the engine: the jdbc branch fails to
+    // find one instead of reading the parquet twin
+    val e = intercept[java.sql.SQLException](
+      Ingest.jdbcOrParquet(spark, Some("jdbc:graft-none://h/db"), "nation", sfDir))
+    assert(e.getMessage.contains("No suitable driver"), e.getMessage)
+  }
+
   test("S5/S6: catalog probes") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
     assert(Ingest.columnNames(docs) == Seq("doc_id", "text", "lang", "source", "n_chars"))

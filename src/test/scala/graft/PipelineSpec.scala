@@ -72,6 +72,17 @@ class PipelineSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("F5: splitEligible splits on both coordinates being present") {
+    import spark.implicits._
+    val df = Seq((1, Some(34.0), Some(-118.0)), (2, None, Some(-74.0)),
+      (3, Some(40.0), None), (4, None, None))
+      .toDF("id", "decimalLatitude", "decimalLongitude")
+    val (eligible, rest) = Enrichment.splitEligible(df)
+    def ids(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.getInt(0)).sorted.toSeq
+    assert(ids(eligible) == Seq(1))
+    assert(ids(rest) == Seq(2, 3, 4))
+  }
+
   test("batched mapPartitions geocode client enriches in batches") {
     val fake: Seq[(Double, Double)] => Seq[(Option[String], Option[String])] =
       coords => coords.map { case (lat, _) =>

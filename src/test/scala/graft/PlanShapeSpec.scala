@@ -26,6 +26,16 @@ class PlanShapeSpec extends SparkSpec {
     p +: kids.flatMap(flatten)
   }
 
+  /** The nodes fused into a whole-stage-codegen stage, among `nodes`. */
+  private def fused(nodes: Seq[SparkPlan]): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.{InputAdapter, WholeStageCodegenExec}
+    def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case other => other.children.flatMap(stage)
+    })
+    nodes.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+  }
+
   /** Physical-plan string per query, built once. Building a plan is
     * cheap; the handful of eager (checkpointing) operators execute at
     * sf0.001, which keeps this suite fast.
@@ -528,7 +538,7 @@ class PlanShapeSpec extends SparkSpec {
   test("the frontier fetch set canonicalizes inside whole-stage codegen, no HOF") {
     import org.apache.spark.sql.functions.{col, concat, lit}
     import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, GetStructField, HigherOrderFunction}
-    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.ProjectExec
     val tmp = java.nio.file.Files.createTempDirectory("graft-fetchset").toString
     // a range, not a local Seq: a LocalRelation would fold the projection
     def urls(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id"),
@@ -538,11 +548,7 @@ class PlanShapeSpec extends SparkSpec {
     val fetch = graft.operators.Urls.frontierFetchSet(spark, tmp, urls(10, 30), "id", "url")
     assert(fetch.collect().length == 10) // finalize THIS df's AQE plan
     val nodes = flatten(fetch.queryExecution.executedPlan)
-    def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case _: InputAdapter => Nil
-      case other => other.children.flatMap(stage)
-    })
-    val fused = nodes.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+    val inCodegen = fused(nodes)
     val canon = nodes.collect {
       case p: ProjectExec if p.projectList.exists {
         // computed here, not read back out of the aggregate's struct
@@ -555,9 +561,81 @@ class PlanShapeSpec extends SparkSpec {
     }
     assert(canon.nonEmpty, fetch.queryExecution.executedPlan.toString)
     for (p <- canon) {
-      assert(fused.exists(_ eq p), s"canonicalizing Project outside whole-stage codegen:\n$p")
+      assert(inCodegen.exists(_ eq p), s"canonicalizing Project outside whole-stage codegen:\n$p")
       assert(!p.projectList.exists(_.exists(_.isInstanceOf[HigherOrderFunction])),
         s"higher-order function in the canonicalizing Project:\n$p")
     }
+  }
+
+  test("the frontier fetch set canonicalizes each row once") {
+    // a filter on canonical_url would be pushed below the projection
+    // with the alias substituted: a second canonicalize per row
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import graft.expressions.CanonicalizeUrlExpression
+    val tmp = java.nio.file.Files.createTempDirectory("graft-fetchonce").toString
+    def urls(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id"),
+      concat(lit("https://h"), (col("id") % 5).cast("string"), lit(".example.com/p/"),
+        col("id").cast("string")).as("url"))
+    graft.operators.Urls.writeFrontierIndex(urls(0, 20), "url", tmp)
+    val fetch = graft.operators.Urls.frontierFetchSet(spark, tmp, urls(10, 30), "id", "url")
+    val plan = fetch.queryExecution.optimizedPlan
+    val n = plan.collect { case p => p.expressions }.flatten
+      .map(_.collect { case e: CanonicalizeUrlExpression => e }.size).sum
+    assert(n == 1, s"$n canonicalize_url expressions:\n$plan")
+  }
+
+  test("sign shingles each row once, natively, inside whole-stage codegen") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.ProjectExec
+    import graft.expressions.ShingleSetExpression
+    // a range, not a local Seq: a LocalRelation would fold the projection
+    val docs = spark.range(0, 40).select(col("id").as("doc_id"),
+      concat(lit("a document of some length, number "), col("id").cast("string")).as("text"))
+    val sigs = graft.operators.Dedup.sign(docs, "doc_id", "text", 7, 96, 24)
+    val opt = sigs.queryExecution.optimizedPlan
+    val exprs = opt.collect { case p => p.expressions }.flatten.flatMap(_.collect { case e => e })
+    assert(exprs.count(_.isInstanceOf[ShingleSetExpression]) == 1, opt)
+    assert(!exprs.exists(_.isInstanceOf[HigherOrderFunction]), opt)
+    assert(!exprs.exists(_.isInstanceOf[CodegenFallback]), opt)
+    assert(sigs.collect().length == 40) // finalize THIS df's AQE plan
+    val nodes = flatten(sigs.queryExecution.executedPlan)
+    val inCodegen = fused(nodes)
+    val shingling = nodes.collect {
+      case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[ShingleSetExpression])) => p
+    }
+    assert(shingling.size == 1, sigs.queryExecution.executedPlan)
+    assert(inCodegen.exists(_ eq shingling.head),
+      s"shingling Project outside whole-stage codegen:\n${sigs.queryExecution.executedPlan}")
+  }
+
+  test("no Filter of a keyed corpus-ingest batch shingles, signs or canonicalizes") {
+    // each of these in a Filter means the expression runs twice per
+    // row: once to filter, once in the projection above it
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import graft.streaming.CorpusIngest
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cfilter").toString
+    // a parquet batch, as a stream's micro-batch file is read (a local
+    // Seq would fold the plan into a LocalRelation). Doc i's text is a
+    // function of i % 100: doc 110 repeats doc 10
+    def ingest(lo: Long, hi: Long, id: Long): Long = {
+      spark.range(lo, hi).select(col("id").as("doc_id"),
+        concat(lit("corpus text of one document, variant "),
+          (col("id") % 100 * 7919).cast("string"), lit(" and its tail")).as("text"))
+        .write.parquet(s"$tmp/in$id")
+      CorpusIngest.ingestBatch(spark.read.parquet(s"$tmp/in$id"),
+        s"$tmp/idx", s"$tmp/out", "doc_id", "text", batchId = Some(id))
+    }
+    ingest(0, 20, 0L): Unit
+    val plans = SparkEvents.capture(spark) { ingest(110, 140, 1L): Unit }.plans
+    // the formatted plan: one block per node, headed "(n) Name"
+    val filters = plans.flatMap(_.split("\n(?=\\(\\d+\\) )"))
+      .filter(_.matches("(?s)\\(\\d+\\) Filter.*"))
+    assert(filters.exists(_.contains("length(text")), plans.mkString("\n"))
+    val costly = Seq("shingle_set", "minhashsignature", "bandkeys", "canonicalize_url",
+      "lambdafunction")
+    val bad = filters.filter(f => costly.exists(f.toLowerCase.contains))
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 }

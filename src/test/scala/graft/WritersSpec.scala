@@ -28,6 +28,19 @@ class WritersSpec extends SparkSpec {
     assert(day1.length == 1 && day1.head.getAs[Long]("record_count") == 111L)
   }
 
+  test("K2: append load adds a day's rows and keeps earlier loads") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft-k2").toString + "/t"
+    Writers.appendPartitionedByDay(
+      Seq((1, "2024-06-01"), (2, "2024-06-02")).toDF("id", "date_only"), path)
+    Writers.appendPartitionedByDay(Seq((3, "2024-06-01")).toDF("id", "date_only"), path)
+    val back = spark.read.parquet(path)
+    assert(back.collect().map(r => (r.getAs[Int]("id"), r.getAs[Any]("date_only").toString))
+      .sortBy(_._1).toSeq == Seq((1, "2024-06-01"), (2, "2024-06-02"), (3, "2024-06-01")))
+    assert(new java.io.File(path).list().filter(_.startsWith("date_only=")).sorted.toSeq ==
+      Seq("date_only=2024-06-01", "date_only=2024-06-02"))
+  }
+
   test("inventory upsert swaps atomically: no temp/backup leftovers, catalog always readable") {
     val path = freshPath()
     Writers.upsertInventory(spark, path,
